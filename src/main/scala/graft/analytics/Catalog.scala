@@ -6,7 +6,8 @@ import org.apache.spark.sql.types.DecimalType
 
 /** One declared query: the Spark program, and (when SQL-expressible) the
   * equivalent ANSI SQL the DuckDB oracle runs over the same parquet tables.
-  * `bench = true` marks headline queries timed by graft.Bench.
+  * `bench = true` marks the headline subset the plan and scale tools
+  * (ExplainAudit, ScaleStress, Counts) run.
   */
 final case class CatalogQuery(
     name: String,

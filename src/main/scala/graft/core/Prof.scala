@@ -10,11 +10,10 @@ package graft.core
   * fixed-overhead work in round 12 was measured).
   *
   * Capture mode ([[captureStart]]/[[captureStop]]) accumulates per-label
-  * totals in memory instead of printing — graft.Bench wraps each pass in
-  * a capture so the bench artifact can carry per-phase times for lines
-  * whose cost is phase-structured (the forest-cut line's init share vs
-  * probe/skip path), making a phase regression separable from init
-  * drift in BENCH_rN without a ProfileOne session.
+  * totals in memory instead of printing — [[graft.tools.ProfileOne]]
+  * wraps each pass in a capture and prints the pass's per-phase totals,
+  * so a phase-structured cost (the forest-cut line's init share vs its
+  * probe/skip path) is separable from init drift.
   */
 object Prof {
   private val enabled: Boolean = sys.env.contains("GRAFT_PROF")

@@ -231,11 +231,7 @@ object PipelineConfig {
       "pipeline config: missing required field 'checkpoint' (launch needs a " +
         "durable position store)")
     val source = parseSourceNode(spark, req(root, "input"))
-    val output = req(root, "output")
-    val baseSink =
-      if (!output.isArray) parseSinkNode(spark, output, plan.pkCols, metrics)
-      else new graft.streaming.CompositeSink(
-        output.elements().asScala.map(parseSinkNode(spark, _, plan.pkCols, metrics)).toSeq)
+    val baseSink = parseSinksNode(spark, req(root, "output"), plan.pkCols, metrics)
     // optional external position mirror — the reference's
     // [input.config.position-repo] type = "mysql-repo" section
     // (position_repos; checkpoint stays the source of truth)
@@ -298,12 +294,15 @@ object PipelineConfig {
     */
   def parseSinks(spark: org.apache.spark.sql.SparkSession, json: String,
       pkCols: Seq[String],
-      metrics: Option[graft.streaming.MetricsRegistry] = None): graft.streaming.BatchSink = {
-    val root = mapper.readTree(json)
-    if (!root.isArray) parseSinkNode(spark, root, pkCols, metrics)
+      metrics: Option[graft.streaming.MetricsRegistry] = None): graft.streaming.BatchSink =
+    parseSinksNode(spark, mapper.readTree(json), pkCols, metrics)
+
+  private def parseSinksNode(spark: org.apache.spark.sql.SparkSession, o: JsonNode,
+      pkCols: Seq[String],
+      metrics: Option[graft.streaming.MetricsRegistry]): graft.streaming.BatchSink =
+    if (!o.isArray) parseSinkNode(spark, o, pkCols, metrics)
     else new graft.streaming.CompositeSink(
-      root.elements().asScala.map(parseSinkNode(spark, _, pkCols, metrics)).toSeq)
-  }
+      o.elements().asScala.map(parseSinkNode(spark, _, pkCols, metrics)).toSeq)
 
   private def parseSinkNode(spark: org.apache.spark.sql.SparkSession, o: JsonNode,
       pkCols: Seq[String],
@@ -311,10 +310,14 @@ object PipelineConfig {
     // sink-level "pk" overrides the plan's (a snapshot keyed per
     // (target, pk) next to a per-table relational target)
     val pk = Option(o.get("pk")).map(strList).getOrElse(pkCols)
+    val columns = Option(o.get("columns")).map(strList)
+    // "columns": output-side projection applied before the sink
+    def projected(sink: graft.streaming.BatchSink): graft.streaming.BatchSink =
+      columns.fold(sink)(new graft.streaming.ProjectingSink(sink, _))
     val base: graft.streaming.BatchSink = req(o, "type").asText() match {
       case "snapshot" =>
-        new graft.streaming.SnapshotBatchSink(spark, req(o, "path").asText(), pk,
-          Option(o.get("buckets")).map(_.asInt()).getOrElse(16))
+        projected(new graft.streaming.SnapshotBatchSink(spark, req(o, "path").asText(), pk,
+          Option(o.get("buckets")).map(_.asInt()).getOrElse(16)))
       case "jdbc" =>
         val url = req(o, "url").asText()
         val engine = Option(o.get("engine")).map(_.asText()).getOrElse("replace") match {
@@ -339,7 +342,7 @@ object PipelineConfig {
           if (!Option(o.get("introspect-schemas")).exists(_.asBoolean())) None
           else Some(graft.core.JdbcSchemaIntrospector.writableFetch(() =>
             java.sql.DriverManager.getConnection(url)))
-        new graft.sinks.JdbcBatchSink(
+        projected(new graft.sinks.JdbcBatchSink(
           () => new graft.sinks.JdbcStatementExecutor(url),
           engine, pk, targets = targets, schemaFor = schemaFor,
           maxRowsPerStatement =
@@ -347,17 +350,17 @@ object PipelineConfig {
           numWriters = Option(o.get("num-writers")).map(_.asInt()),
           txnTagger = Option(o.get("txn-tag-table")).map(t =>
             graft.sinks.InternalTxnTagger(t.asText(),
-              Option(o.get("pipeline-name")).map(_.asText()).getOrElse("graft"))))
+              Option(o.get("pipeline-name")).map(_.asText()).getOrElse("graft")))))
       case "kafka-file" =>
-        // owns its "columns" as the wire payload selection — the generic
-        // ProjectingSink would strip database/table and silently downgrade
-        // the 2.0.alpha envelope to generic JSON
+        // the kafka sinks own "columns" as the wire payload selection —
+        // projecting would strip the database/table the 2.0.alpha
+        // envelope needs and silently downgrade it to generic JSON
         new graft.sinks.KafkaFileBatchSink(
           req(o, "path").asText(),
           Option(o.get("partitions")).map(_.asInt()).getOrElse(4),
           Option(o.get("topic")).map(_.asText()),
           pk,
-          payloadColumns = Option(o.get("columns")).map(strList))
+          payloadColumns = columns)
       case "kafka-wire" =>
         // the real-broker seat: executor-side wire producers; batch-magic
         // 2 selects RecordBatch v2 / produce v3 (the 4.x-broker dialect)
@@ -367,7 +370,7 @@ object PipelineConfig {
           Option(o.get("partitions")).map(_.asInt()).getOrElse(4),
           req(o, "topic").asText(),
           pk,
-          payloadColumns = Option(o.get("columns")).map(strList),
+          payloadColumns = columns,
           maxRecordsPerRequest =
             Option(o.get("max-records-per-request")).map(_.asInt()).getOrElse(1000),
           batchMagic = Option(o.get("batch-magic")).map(_.asInt()).getOrElse(1),
@@ -379,19 +382,10 @@ object PipelineConfig {
             Option(o.get("tls-password")).map(_.asText()).getOrElse(""))))
       case other => throw new IllegalArgumentException(s"unknown output type '$other'")
     }
-    // "columns": output-side projection applied before the sink (the two
-    // kafka sinks consumed it above as payload selection — projecting
-    // would strip the database/table the envelope needs)
-    val projected = Option(o.get("columns")).map(strList) match {
-      case Some(cols) if !base.isInstanceOf[graft.sinks.KafkaFileBatchSink] &&
-          !base.isInstanceOf[graft.sinks.KafkaWireBatchSink] =>
-        new graft.streaming.ProjectingSink(base, cols)
-      case _ => base
-    }
     Option(o.get("retries")).map(_.asInt()) match {
-      case Some(r) => new graft.streaming.RetryingSink(projected, r,
+      case Some(r) => new graft.streaming.RetryingSink(base, r,
         Option(o.get("retry-sleep-ms")).map(_.asLong()).getOrElse(1000L), metrics)
-      case None => projected
+      case None => base
     }
   }
 }

@@ -83,14 +83,59 @@ object KafkaJson {
     val cols = if (df.columns.contains("seq")) base :+ col("seq") else base
     df.select(cols: _*)
   }
+
+  /** A Kafka frame laid out for a transport: `(__part, key, value)` with
+    * `__part = pmod(xxhash64(key), n)` — sarama's hash partitioner, so a
+    * key lands on the same partition whichever transport carries it and
+    * per-key total order holds across batches. One shuffle partition per
+    * broker partition; a hash collision can co-locate two parts in one
+    * task, so rows sort by part (then `seq`, when the frame has one) and
+    * the transport rolls its output on the part boundary.
+    */
+  private[sinks] def partitioned(kafkaFrame: DataFrame,
+      numPartitions: Int): DataFrame = {
+    val sortCols =
+      if (kafkaFrame.columns.contains("seq")) Seq(col("__part"), col("seq"))
+      else Seq(col("__part"))
+    kafkaFrame
+      .withColumn("__part", pmod(xxhash64(col("key")), lit(numPartitions)))
+      .repartition(numPartitions, col("__part"))
+      .sortWithinPartitions(sortCols: _*)
+      .select(col("__part"), col("key"), col("value"))
+  }
+
+  private val bookkeeping = Set("op", "seq", "database", "table", "type",
+    "ddl_statement", "tgt_schema", "tgt_table", "tgt_topic", "tgt_index")
+
+  /** A compacted change batch as the [[partitioned]] record frame every
+    * Kafka transport ships. Value: the 2.0.alpha envelope when the batch
+    * carries database/table/op, else the generic typed JSON of the
+    * payload (`payloadColumns`, default every non-bookkeeping column).
+    * Key: the pk dependency hash. Topic priority: configured literal >
+    * routed `tgt_topic` (the column Router.kafka exists to produce) >
+    * `database.table` > fixed fallback.
+    */
+  private[sinks] def records(compacted: DataFrame, numPartitions: Int,
+      topic: Option[String], pkCols: Seq[String],
+      payloadColumns: Option[Seq[String]]): DataFrame = {
+    val cols = compacted.columns.toSet
+    val payloadCols = payloadColumns.getOrElse(
+      compacted.columns.filterNot(bookkeeping).toSeq)
+    val hasEnvelope = cols("database") && cols("table") && cols("op")
+    val value =
+      if (hasEnvelope) valueV20(payloadCols, pkCols)
+      else to_json(struct(payloadCols.map(col): _*))
+    val topicCol = topic.map(lit).getOrElse(
+      if (cols("tgt_topic")) col("tgt_topic")
+      else if (hasEnvelope) concat_ws(".", col("database"), col("table"))
+      else lit("graft"))
+    partitioned(toKafkaFrame(compacted, value, pkCols, topicCol), numPartitions)
+  }
 }
 
-/** Config-driven Kafka output over the file-log emulation: converts each
-  * compacted batch to the wire frame (2.0.alpha typed value when the
-  * stream carries the database/table envelope, generic typed JSON
-  * otherwise; key = pk dependency hash; topic = configured literal or
-  * `database.table`) and appends it to the partitioned file log.
-  * Swap [[FileKafkaSink]] for `writeStream.format("kafka")` in a real
+/** Config-driven Kafka output over the file-log emulation: appends each
+  * compacted batch's [[KafkaJson.records]] frame to the partitioned file
+  * log. Swap [[FileKafkaSink]] for `writeStream.format("kafka")` in a real
   * deployment — the frame is identical.
   */
 final class KafkaFileBatchSink(dir: String, numPartitions: Int,
@@ -100,26 +145,9 @@ final class KafkaFileBatchSink(dir: String, numPartitions: Int,
 
   private val inner = new FileKafkaSink(dir, numPartitions)
 
-  def write(batchId: Long, compacted: DataFrame): Unit = {
-    val cols = compacted.columns.toSet
-    val bookkeeping = Set("op", "seq", "database", "table", "type",
-      "ddl_statement", "tgt_schema", "tgt_table", "tgt_topic", "tgt_index")
-    val payloadCols = payloadColumns.getOrElse(
-      compacted.columns.filterNot(bookkeeping).toSeq)
-    // the 2.0.alpha envelope needs database/table/op; otherwise the value
-    // is the generic typed JSON of the payload
-    val hasEnvelope = cols("database") && cols("table") && cols("op")
-    val value =
-      if (hasEnvelope) KafkaJson.valueV20(payloadCols, pkCols)
-      else to_json(struct(payloadCols.map(col): _*))
-    // topic priority: configured literal > routed tgt_topic (the column
-    // Router.kafka exists to produce) > database.table > fixed fallback
-    val topicCol = topic.map(lit).getOrElse(
-      if (cols("tgt_topic")) col("tgt_topic")
-      else if (hasEnvelope) concat_ws(".", col("database"), col("table"))
-      else lit("graft"))
-    inner.write(batchId, KafkaJson.toKafkaFrame(compacted, value, pkCols, topicCol))
-  }
+  def write(batchId: Long, compacted: DataFrame): Unit =
+    inner.append(batchId, KafkaJson.records(compacted, numPartitions, topic,
+      pkCols, payloadColumns))
 
   def partitionLog(p: Long): Seq[String] = inner.partitionLog(p)
   def partitions: Seq[Long] = inner.partitions
@@ -143,22 +171,16 @@ final class KafkaFileBatchSink(dir: String, numPartitions: Int,
 final class FileKafkaSink(dir: String, numPartitions: Int)
     extends graft.streaming.BatchSink {
 
-  def write(batchId: Long, kafkaFrame: DataFrame): Unit = {
-    val (d, n) = (dir, numPartitions)
-    // seq orders a change stream's rows within the partition log; frames
-    // without one (snapshot-style batches) keep arrival order per part
-    val sortCols =
-      if (kafkaFrame.columns.contains("seq")) Seq(col("__part"), col("seq"))
-      else Seq(col("__part"))
-    val prepared = kafkaFrame
-      .withColumn("__part", pmod(xxhash64(col("key")), lit(n)))
-      // one shuffle partition per broker partition; a hash collision can
-      // co-locate two parts in one task — the sort keeps their runs
-      // contiguous and the writer splits files on the part boundary
-      .repartition(n, col("__part"))
-      .sortWithinPartitions(sortCols: _*)
-      .select(col("__part"), col("value"))
-    prepared.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+  def write(batchId: Long, kafkaFrame: DataFrame): Unit =
+    append(batchId, KafkaJson.partitioned(kafkaFrame, numPartitions))
+
+  /** Append a [[KafkaJson.partitioned]] frame: one file per part. The log
+    * stores values only, so the key is pruned before the shuffle.
+    */
+  private[sinks] def append(batchId: Long, records: DataFrame): Unit = {
+    val d = dir
+    val values = records.select(col("__part"), col("value"))
+    values.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
       var cur = -1L
       var w: java.io.Writer = null
       def close(): Unit = if (w != null) { w.close(); w = null }

@@ -736,12 +736,11 @@ object KafkaWire {
   }
 }
 
-/** Kafka output over the REAL wire producer: renders each compacted
-  * batch to the same frame KafkaFileBatchSink produces (2.0.alpha typed
-  * value, pk dependency-hash key) and produces it to
-  * `hash(key) % numPartitions` — sarama's hash partitioner, the same
-  * sticky rule [[FileKafkaSink]] uses, so per-key total order holds
-  * across batches on a real broker too.
+/** Kafka output over the REAL wire producer: ships each compacted
+  * batch's [[KafkaJson.records]] frame — the one [[KafkaFileBatchSink]]
+  * appends — producing every record to its `__part`, so per-key total
+  * order holds across batches on a real broker too. The topic is the
+  * configured literal.
   *
   * Topology: the batch is repartitioned on the broker-partition
   * expression and produced from EXECUTORS — one wire connection per
@@ -773,31 +772,8 @@ final class KafkaWireBatchSink(host: String, port: Int, numPartitions: Int,
     extends graft.streaming.BatchSink {
 
   def write(batchId: Long, compacted: org.apache.spark.sql.DataFrame): Unit = {
-    import org.apache.spark.sql.functions._
-    val cols = compacted.columns.toSet
-    val bookkeeping = Set("op", "seq", "database", "table", "type",
-      "ddl_statement", "tgt_schema", "tgt_table", "tgt_topic", "tgt_index")
-    val payloadCols = payloadColumns.getOrElse(
-      compacted.columns.filterNot(bookkeeping).toSeq)
-    val hasEnvelope = cols("database") && cols("table") && cols("op")
-    val value =
-      if (hasEnvelope) KafkaJson.valueV20(payloadCols, pkCols)
-      else to_json(struct(payloadCols.map(col): _*))
-    val frame = KafkaJson.toKafkaFrame(compacted, value, pkCols, lit(topic))
-    // partition with the SAME expression FileKafkaSink uses
-    // (pmod(xxhash64(key), n)) so a key lands on the same partition no
-    // matter which transport carries it
-    val sortCols =
-      if (frame.columns.contains("seq")) Seq(col("__part"), col("seq"))
-      else Seq(col("__part"))
-    val prepared = frame
-      .withColumn("__part", pmod(xxhash64(col("key")), lit(numPartitions)))
-      // one shuffle partition per broker partition; a hash collision can
-      // co-locate two parts in one task — the sort keeps their runs
-      // contiguous and the producer rolls requests on the part boundary
-      .repartition(numPartitions, col("__part"))
-      .sortWithinPartitions(sortCols: _*)
-      .select(col("__part"), col("key"), col("value"))
+    val records = KafkaJson.records(compacted, numPartitions, Some(topic),
+      pkCols, payloadColumns)
     // closure captures primitives only (the sink itself need not ship)
     val (h, p, t, chunk, magic, auth, tlsStore) =
       (host, port, topic, maxRecordsPerRequest, batchMagic, sasl, tls)
@@ -805,7 +781,7 @@ final class KafkaWireBatchSink(host: String, port: Int, numPartitions: Int,
     // retention and time-index — 0 would make every segment instantly
     // past any retention window
     val now = System.currentTimeMillis()
-    prepared.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+    records.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
       if (it.hasNext) {
         // client id names the producing task — broker-side attribution
         // that a support engineer reading the request log can use

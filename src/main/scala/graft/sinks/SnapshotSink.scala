@@ -1,7 +1,7 @@
 package graft.sinks
 
 import graft.core.ChangeLog
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Parquet snapshot sink: maintains a materialized table from change
@@ -40,10 +40,9 @@ import org.apache.spark.sql.functions._
   * generations and old manifests are garbage-collected after commit.
   * Applied ids are stored as compacted inclusive ranges (sequential
   * foreachBatch ids collapse to a single range), so the manifest stays
-  * O(numBuckets), never O(batches) — this also retires the unbounded
-  * `.applied` marker-directory-per-batch of the previous design.
-  */
-/** @param readGrace when true, manifest (and so generation) retention
+  * O(numBuckets), never O(batches).
+  *
+  * @param readGrace when true, manifest (and so generation) retention
   *   keeps the predecessor version, so a lazy read() plan survives
   *   exactly ONE subsequent merge — the contract an EXTERNAL reader of a
   *   serving sink needs (it may hold a frame across a maintenance
@@ -53,17 +52,7 @@ import org.apache.spark.sql.functions._
   *   discipline), and universal grace measurably taxed the sink-heaviest
   *   maintenance loops (~+21% on ann_cdc_incremental_index at sf0.1, the
   *   r11 judge pair) for a contract nothing used there.
-  *
-  * A version-checked in-memory hot cache over read()/merge was built and
-  * A/B-measured in round 12 (per-path checkpointed full-state frame,
-  * invalidated by manifest version): NEUTRAL on this host at sf0.1 —
-  * the OS page cache already absorbs local parquet re-reads, and the
-  * residual cost is DAG/stage overhead the cache cannot remove. Removed
-  * rather than shipped unmeasurable; on a real cluster the equivalent
-  * lever is executor-side parquet caching (e.g. spark.io.cache), not
-  * sink-layer machinery.
-  */
-/** @param bucketBy columns the bucket hash is computed from; default =
+  * @param bucketBy columns the bucket hash is computed from; default =
   *   the full pk. Passing a PREFIX of the row's identity (e.g. `u` for an
   *   edge sink keyed (u, v)) makes [[readBuckets]] answer prefix point
   *   reads — "every edge whose u is in this vertex set" prunes to the
@@ -74,9 +63,9 @@ import org.apache.spark.sql.functions._
   */
 final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
     numBuckets: Int = 16, readGrace: Boolean = false,
-    bucketBy: Seq[String] = Nil) {
-
-  private val bucketCols: Seq[String] = if (bucketBy.isEmpty) pkCols else bucketBy
+    bucketBy: Seq[String] = Nil)
+    extends SnapshotSink.BucketLayout(
+      if (bucketBy.isEmpty) pkCols else bucketBy, numBuckets) {
 
   private val dataPath = path + "/data"
   private val manifestPath = path + "/manifest"
@@ -125,8 +114,6 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
     * transaction.
     */
   def exists: Boolean = currentManifest().isDefined
-
-  private def bucketCol = pmod(xxhash64(bucketCols.map(col): _*), lit(numBuckets)).cast("int")
 
   /** Seq-LWW compaction computed INSIDE the bucket layout: ONE exchange
     * on `__bucket` carries the payload, and the per-pk window then runs
@@ -242,8 +229,7 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
     * `localCheckpoint()` first (the in-tree foreachBatch bodies do,
     * under the AuditSeam discipline).
     */
-  def read(): DataFrame =
-    readInternal().filter(!col("__deleted")).drop("__seq", "__deleted", "__bucket")
+  def read(): DataFrame = reading(_.readAll())
 
   /** Live state restricted to the bucket-hash buckets `keys` can live in
     * — the bucket-pruned POINT-READ path: only bucket directories whose
@@ -258,35 +244,6 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
   def readBuckets(keys: DataFrame): DataFrame =
     readBucketIds(bucketIds(keys))
 
-  /** The bucket ids `keys` hash to — ONE driver collect (≤ numBuckets
-    * rows). Computable once and shared across sinks with an identical
-    * (bucketBy-arity, numBuckets) layout: a graph sink and its
-    * reverse-adjacency twin read with the same frontier pay one job,
-    * not two.
-    */
-  def bucketIds(keys: DataFrame): Set[Int] = keys
-    .select(bucketIdExpr().as("__b"))
-    .distinct().collect().map(_.getInt(0)).toSet
-
-  /** The bucket-id expression [[bucketIds]] collects, over `keys`
-    * columns (default: the sink's bucketBy columns by name) — for fusing
-    * the bucket-id projection into a job the caller already runs
-    * (graft.core.Fused.checkpointIntSet observes collect_set of this on
-    * a checkpoint job, replacing the separate driver-collect job).
-    */
-  def bucketIdExpr(keys: org.apache.spark.sql.Column*): org.apache.spark.sql.Column = {
-    val ks = if (keys.nonEmpty) keys else bucketCols.map(col)
-    pmod(xxhash64(ks: _*), lit(numBuckets)).cast("int")
-  }
-
-  /** Driver-side bucket id of one literal key — the SAME xxhash64(seed
-    * 42) the executors compute, evaluated through the same catalyst
-    * expression class so it can never drift. For reads whose key set is
-    * already a driver value (a fixed metadata key, a driver-planned
-    * segment list): turns the bucket-id projection job into arithmetic.
-    */
-  def bucketIdOf(keys: Any*): Int = SnapshotSink.bucketIdOf(numBuckets, keys: _*)
-
   /** Pin the CURRENT manifest once and serve every later point read from
     * it without re-taking the lock, re-running recovery, or re-reading
     * the manifest file — the multi-read serve-path fast path (a 3-hop
@@ -299,35 +256,30 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
     */
   def pin(): SnapshotSink.Pinned = swapLock.synchronized {
     recover()
-    val m = currentManifest().getOrElse(sys.error(s"snapshot at $path does not exist"))
-    new SnapshotSink.Pinned(spark, dataPath, m.buckets, bucketCols, numBuckets)
+    pinned(currentManifest()
+      .getOrElse(sys.error(s"snapshot at $path does not exist")).buckets)
   }
 
   /** [[readBuckets]] with a precomputed bucket-id set (from
     * [[bucketIds]] on this or a layout-identical sink).
     */
-  def readBucketIds(wanted: Set[Int]): DataFrame = swapLock.synchronized {
-    recover()
-    val m = currentManifest().getOrElse(sys.error(s"snapshot at $path does not exist"))
-    val dirs = m.buckets.toSeq.sortBy(_._1)
-      .filter { case (b, _) => wanted(b) }
-      .map { case (b, g) => s"$dataPath/__bucket=$b/__gen=$g" }
-    val full = readCommitted(m)
-    val pruned =
-      if (dirs.isEmpty) full.filter(lit(false))
-      else spark.read.option("basePath", dataPath).parquet(dirs: _*).drop("__gen")
-    pruned.filter(!col("__deleted")).drop("__seq", "__deleted", "__bucket")
-  }
+  def readBucketIds(wanted: Set[Int]): DataFrame = reading(_.readBucketIds(wanted))
 
   /** Full state including tombstones and bucket ids, as of the current
     * committed manifest. Recovers first so uncommitted garbage from a
     * crashed merge never accumulates unbounded.
     */
-  def readInternal(): DataFrame = swapLock.synchronized {
-    recover()
-    val m = currentManifest().getOrElse(sys.error(s"snapshot at $path does not exist"))
-    readCommitted(m)
-  }
+  def readInternal(): DataFrame = reading(_.committed())
+
+  /** Every sink read is a [[Pinned]] view over the current manifest. The
+    * relation is built under the lock too: Spark lists its files eagerly,
+    * and no merge's GC may reap the pinned generations before it does.
+    */
+  private def reading(read: SnapshotSink.Pinned => DataFrame): DataFrame =
+    swapLock.synchronized(read(pin()))
+
+  private def pinned(buckets: Map[Int, Long]): SnapshotSink.Pinned =
+    new SnapshotSink.Pinned(spark, dataPath, buckets, bucketCols, numBuckets)
 
   /** True iff `batchId` is recorded in the current committed manifest.
     * For foreachBatch bodies that write SIDE artifacts next to the sink
@@ -340,14 +292,6 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
   def applied(batchId: Long): Boolean = swapLock.synchronized {
     recover()
     currentManifest().exists(m => SnapshotSink.Ranges.contains(m.applied, batchId))
-  }
-
-  private def readCommitted(m: Manifest): DataFrame = {
-    val dirs = m.buckets.toSeq.sortBy(_._1).map { case (b, g) =>
-      s"$dataPath/__bucket=$b/__gen=$g"
-    }
-    require(dirs.nonEmpty, s"snapshot at $path committed with zero buckets")
-    spark.read.option("basePath", dataPath).parquet(dirs: _*).drop("__gen")
   }
 
   /** Reap uncommitted garbage: staging, manifest tmps, and generation
@@ -455,175 +399,176 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
     */
   def replace(batch: DataFrame): Unit = swapLock.synchronized {
     recover()
-    val cur = currentManifest()
-    val dataCols = batch.columns.filterNot(c => c == "op" || c == "seq").toSeq
-    val normalized0 = batch.select(
-      (dataCols.map(col) :+ col("seq").as("__seq") :+
-        (col("op") === ChangeLog.Delete).as("__deleted")): _*)
-      .withColumn("__bucket", bucketCol)
-    // same defensive-copy elision contract as merge (the staged write
-    // must not re-evaluate an unstable plan; a checkpointed batch skips
-    // the copy)
-    val shallow = SnapshotSink.isMaterializedShallow(batch)
-    SnapshotSink.elisionProbe.foreach(_(path, shallow))
-    val normalized =
-      if (shallow) normalized0 else normalized0.localCheckpoint()
-    val fs = hfs
-    val newVersion = cur.map(_.version + 1).getOrElse(1L)
-    val next = lastPerKeyBucketed(normalized)
-    recovered.set(false) // dirty until the commit+gc walk completes
-    graft.core.Prof.time(s"sink/write") {
-      next.write.mode(SaveMode.Overwrite).partitionBy("__bucket").parquet(stagingPath)
-    }
-    val written = fs.listStatus(p(stagingPath)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("__bucket="))
-      .map(_.stripPrefix("__bucket=").toInt).sorted
-    val staged =
-      if (written.nonEmpty) written
-      else {
-        // empty new state: stage bucket 0 as an explicit empty
-        // generation (the merge-path first-batch discipline) so the
-        // committed manifest never maps zero buckets
-        next.drop("__bucket").write.mode(SaveMode.Overwrite)
-          .parquet(s"$stagingPath/__bucket=0")
-        Seq(0)
-      }
-    staged.foreach { b =>
-      val dst = p(s"$dataPath/__bucket=$b/__gen=$newVersion")
-      if (fs.exists(dst)) fs.delete(dst, true)
-      fs.mkdirs(dst.getParent)
-      renameOrFail(fs, p(s"$stagingPath/__bucket=$b"), dst)
-    }
-    faultHook("staged")
-    val m = Manifest(newVersion, staged.map(_ -> newVersion).toMap,
-      cur.map(_.applied).getOrElse(Nil))
-    commitManifest(m)
-    graft.core.Prof.time(s"sink/gc") { gc(m) }
+    commit(batch, currentManifest(), carried = Map.empty, batchId = None)
   }
 
   private def mergeInternal(batch: DataFrame, batchId: Option[Long]): Boolean =
     swapLock.synchronized {
       recover()
       val cur = currentManifest()
-      batchId.foreach { id =>
-        if (cur.exists(m => SnapshotSink.Ranges.contains(m.applied, id)))
-          return false
-      }
-      val dataCols = batch.columns.filterNot(c => c == "op" || c == "seq").toSeq
-      // materialized ONCE: the batch feeds the touched-bucket projection
-      // AND the merge window+write — without this every merge computes
-      // the caller's batch DAG twice (measured ~0.5s/merge on the ANN
-      // maintenance headliner at sf0.1). Also the standard stability
-      // discipline: the staged write below must not re-evaluate a lazy
-      // plan against generations a concurrent GC could reap. EXCEPT:
-      // when the caller already materialized the batch (every in-tree
-      // maintenance loop checkpoints it — the plan is only narrow ops
-      // over localCheckpoint RDD leaves), both reasons vanish: the
-      // leaves are stable in-memory blocks with no file reads to race
-      // GC, and re-evaluating a Project twice is cheaper than writing a
-      // second full copy of the batch. Detected structurally, never
-      // trusted from the caller.
-      val normalized0 = batch.select(
-        (dataCols.map(col) :+ col("seq").as("__seq") :+
-          (col("op") === ChangeLog.Delete).as("__deleted")): _*)
-        .withColumn("__bucket", bucketCol)
-      val shallow = SnapshotSink.isMaterializedShallow(batch)
-      SnapshotSink.elisionProbe.foreach(_(path, shallow))
-      val normalized =
-        if (shallow) normalized0
-        else normalized0.localCheckpoint()
-      val fs = hfs
-      val newVersion = cur.map(_.version + 1).getOrElse(1L)
-      val newApplied = batchId.fold(cur.map(_.applied).getOrElse(Nil))(id =>
-        SnapshotSink.Ranges.add(cur.map(_.applied).getOrElse(Nil), id))
-
-      val next = cur match {
-        case None =>
-          lastPerKeyBucketed(normalized)
-        case Some(m) =>
-          // touched bucket ids: bounded by numBuckets, driver-safe to collect
-          val touched = graft.core.Prof.time(s"sink/touched") {
-            normalized.select(col("__bucket")).distinct()
-              .collect().map(_.getInt(0)).sorted
-          }
-          if (touched.isEmpty) {
-            // nothing to stage — but an id-carrying empty batch still
-            // commits its id (a replayed empty delta must stay a no-op);
-            // gc keeps manifest retention bounded across consecutive
-            // empty batches (they'd otherwise accumulate until the next
-            // non-empty merge)
-            if (batchId.isDefined) {
-              recovered.set(false) // dirty until the commit+gc walk completes
-              val mm = Manifest(newVersion, m.buckets, newApplied)
-              commitManifest(mm)
-              gc(mm)
-            }
-            return true
-          }
-          // manifest pruning keeps the read to the touched generations only
-          val existing = readCommitted(m)
-            .filter(col("__bucket").isin(touched.map(Int.box): _*))
-          lastPerKeyBucketed(existing.unionByName(normalized))
-      }
-      // From the first staging write to the end of gc's walk the dir can
-      // hold mid-protocol garbage; a failure anywhere in between must
-      // leave the flag dirty so the next op reaps.
-      recovered.set(false)
-      graft.core.Prof.time(s"sink/write") {
-        // lastPerKeyBucketed leaves rows hash-partitioned AND sorted by
-        // __bucket, so the partitioned write emits one file per bucket
-        // per generation with no extra repartition or sort — the layout
-        // a 100 TB read wants, at one payload exchange per merge.
-        next.write.mode(SaveMode.Overwrite).partitionBy("__bucket").parquet(stagingPath)
-      }
-      // stage each written bucket as generation <newVersion> — never
-      // touching the live generation; invisible until the manifest commits
-      val written = fs.listStatus(p(stagingPath)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("__bucket="))
-        .map(_.stripPrefix("__bucket=").toInt).sorted
-      val staged =
-        if (written.nonEmpty) written
-        else {
-          // Empty FIRST batch (cur == None; the Some branch early-returns on
-          // touched.isEmpty). partitionBy of a 0-row frame writes no bucket
-          // dirs, and committing a zero-bucket manifest would wedge the sink
-          // forever (readCommitted rejects it). Stage bucket 0 as an explicit
-          // empty generation instead — same file layout partitionBy produces
-          // (no __bucket column in the data; the read reconstitutes it from
-          // the dir name) — so reads see an empty snapshot with the batch's
-          // schema and later merges proceed normally.
-          next.drop("__bucket").write.mode(SaveMode.Overwrite)
-            .parquet(s"$stagingPath/__bucket=0")
-          Seq(0)
-        }
-      staged.foreach { b =>
-        val dst = p(s"$dataPath/__bucket=$b/__gen=$newVersion")
-        if (fs.exists(dst)) fs.delete(dst, true) // crashed prior attempt
-        fs.mkdirs(dst.getParent)
-        renameOrFail(fs, p(s"$stagingPath/__bucket=$b"), dst)
-      }
-      faultHook("staged")
-      val newBuckets =
-        cur.map(_.buckets).getOrElse(Map.empty) ++ staged.map(_ -> newVersion)
-      commitManifest(Manifest(newVersion, newBuckets, newApplied))
-      graft.core.Prof.time(s"sink/gc") {
-        gc(Manifest(newVersion, newBuckets, newApplied))
-      }
-      true
+      val done = batchId.exists(id =>
+        cur.exists(m => SnapshotSink.Ranges.contains(m.applied, id)))
+      if (!done) commit(batch, cur, cur.map(_.buckets).getOrElse(Map.empty), batchId)
+      !done
     }
+
+  /** The batch in the stored row layout: data columns plus `__seq`,
+    * `__deleted` and `__bucket`.
+    *
+    * Materialized ONCE: the batch feeds the touched-bucket projection
+    * AND the merge window+write — without this every merge computes
+    * the caller's batch DAG twice (measured ~0.5s/merge on the ANN
+    * maintenance headliner at sf0.1). Also the standard stability
+    * discipline: the staged write must not re-evaluate a lazy plan
+    * against generations a concurrent GC could reap. EXCEPT: when the
+    * caller already materialized the batch (every in-tree maintenance
+    * loop checkpoints it — the plan is only narrow ops over
+    * localCheckpoint RDD leaves), both reasons vanish: the leaves are
+    * stable in-memory blocks with no file reads to race GC, and
+    * re-evaluating a Project twice is cheaper than writing a second full
+    * copy of the batch. Detected structurally, never trusted from the
+    * caller.
+    */
+  private def normalize(batch: DataFrame): DataFrame = {
+    val dataCols = batch.columns.filterNot(c => c == "op" || c == "seq").toSeq
+    val normalized = batch.select(
+      (dataCols.map(col) :+ col("seq").as("__seq") :+
+        (col("op") === ChangeLog.Delete).as("__deleted")): _*)
+      .withColumn("__bucket", bucketIdExpr())
+    val shallow = SnapshotSink.isMaterializedShallow(batch)
+    SnapshotSink.elisionProbe.foreach(_(path, shallow))
+    if (shallow) normalized else normalized.localCheckpoint()
+  }
+
+  /** The one write path of merge and replace, run under [[swapLock]]:
+    * normalize, stage every bucket the new state writes as generation
+    * v(n+1), commit the manifest, gc. The manifest maps `carried` (merge:
+    * every current bucket; replace: none) plus the staged buckets, and
+    * records `batchId` in the applied ranges. The batch is seq-LWW
+    * merged with the committed rows of the carried buckets it touches.
+    */
+  private def commit(batch: DataFrame, cur: Option[Manifest],
+      carried: Map[Int, Long], batchId: Option[Long]): Unit = {
+    val normalized = normalize(batch)
+    val fs = hfs
+    val newVersion = cur.map(_.version + 1).getOrElse(1L)
+    val curApplied = cur.map(_.applied).getOrElse(Nil)
+    val applied = batchId.fold(curApplied)(SnapshotSink.Ranges.add(curApplied, _))
+
+    val next =
+      if (carried.isEmpty) lastPerKeyBucketed(normalized)
+      else {
+        // touched bucket ids: bounded by numBuckets, driver-safe to collect
+        val touched = graft.core.Prof.time("sink/touched") {
+          normalized.select(col("__bucket")).distinct()
+            .collect().map(_.getInt(0)).sorted
+        }
+        if (touched.isEmpty) {
+          // nothing to stage — but an id-carrying empty batch still
+          // commits its id (a replayed empty delta must stay a no-op);
+          // gc keeps manifest retention bounded across consecutive
+          // empty batches (they'd otherwise accumulate until the next
+          // non-empty merge)
+          if (batchId.isDefined) {
+            recovered.set(false) // dirty until the commit+gc walk completes
+            val m = Manifest(newVersion, carried, applied)
+            commitManifest(m)
+            gc(m)
+          }
+          return
+        }
+        // manifest pruning keeps the read to the touched generations only
+        val existing = pinned(carried).committed()
+          .filter(col("__bucket").isin(touched.map(Int.box): _*))
+        lastPerKeyBucketed(existing.unionByName(normalized))
+      }
+    // From the first staging write to the end of gc's walk the dir can
+    // hold mid-protocol garbage; a failure anywhere in between must
+    // leave the flag dirty so the next op reaps.
+    recovered.set(false)
+    graft.core.Prof.time("sink/write") {
+      // lastPerKeyBucketed leaves rows hash-partitioned AND sorted by
+      // __bucket, so the partitioned write emits one file per bucket
+      // per generation with no extra repartition or sort — the layout
+      // a 100 TB read wants, at one payload exchange per merge.
+      next.write.mode(SaveMode.Overwrite).partitionBy("__bucket").parquet(stagingPath)
+    }
+    // stage each written bucket as generation <newVersion> — never
+    // touching the live generation; invisible until the manifest commits
+    val written = fs.listStatus(p(stagingPath)).toSeq
+      .map(_.getPath.getName).filter(_.startsWith("__bucket="))
+      .map(_.stripPrefix("__bucket=").toInt).sorted
+    val staged =
+      if (written.nonEmpty) written
+      else {
+        // Empty new state with nothing carried (a first merge, or a
+        // replace). partitionBy of a 0-row frame writes no bucket dirs,
+        // and committing a zero-bucket manifest would wedge the sink
+        // forever (reads reject it). Stage bucket 0 as an explicit empty
+        // generation instead — same file layout partitionBy produces (no
+        // __bucket column in the data; the read reconstitutes it from the
+        // dir name) — so reads see an empty snapshot with the batch's
+        // schema and later merges proceed normally.
+        next.drop("__bucket").write.mode(SaveMode.Overwrite)
+          .parquet(s"$stagingPath/__bucket=0")
+        Seq(0)
+      }
+    staged.foreach { b =>
+      val dst = p(s"$dataPath/__bucket=$b/__gen=$newVersion")
+      if (fs.exists(dst)) fs.delete(dst, true) // crashed prior attempt
+      fs.mkdirs(dst.getParent)
+      renameOrFail(fs, p(s"$stagingPath/__bucket=$b"), dst)
+    }
+    faultHook("staged")
+    val m = Manifest(newVersion, carried ++ staged.map(_ -> newVersion), applied)
+    commitManifest(m)
+    graft.core.Prof.time("sink/gc") { gc(m) }
+  }
 }
 
 object SnapshotSink {
-  /** Driver-side twin of the executor bucket hash: evaluates the SAME
-    * catalyst XxHash64 (seed 42, the xxhash64 SQL function) over literal
-    * keys, then the same pmod. Shared by sink and Pinned [[bucketIdOf]].
+  /** The bucket hash, written once — `pmod(xxhash64(bucketCols),
+    * numBuckets)` — for the sink's stored layout, its point reads and its
+    * [[Pinned]] views.
     */
-  private[sinks] def bucketIdOf(numBuckets: Int, keys: Any*): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    val h = new XxHash64(keys.map(k => Literal(k)), 42L)
-      .eval(org.apache.spark.sql.catalyst.InternalRow.empty)
-      .asInstanceOf[Long]
-    (((h % numBuckets) + numBuckets) % numBuckets).toInt
+  sealed abstract class BucketLayout(protected val bucketCols: Seq[String],
+      numBuckets: Int) {
+
+    /** The bucket ids `keys` hash to — ONE driver collect (≤ numBuckets
+      * rows). Computable once and shared across sinks with an identical
+      * (bucketBy-arity, numBuckets) layout: a graph sink and its
+      * reverse-adjacency twin read with the same frontier pay one job,
+      * not two.
+      */
+    def bucketIds(keys: DataFrame): Set[Int] = keys
+      .select(bucketIdExpr().as("__b"))
+      .distinct().collect().map(_.getInt(0)).toSet
+
+    /** The bucket-id expression [[bucketIds]] collects, over `keys`
+      * columns (default: the sink's bucketBy columns by name) — for fusing
+      * the bucket-id projection into a job the caller already runs
+      * (graft.core.Fused.checkpointIntSet observes collect_set of this on
+      * a checkpoint job, replacing the separate driver-collect job).
+      */
+    def bucketIdExpr(keys: Column*): Column = {
+      val ks = if (keys.nonEmpty) keys else bucketCols.map(col)
+      pmod(xxhash64(ks: _*), lit(numBuckets)).cast("int")
+    }
+
+    /** Driver-side bucket id of one literal key — the SAME catalyst
+      * XxHash64 (seed 42, the xxhash64 SQL function) the executors
+      * compute, then the same pmod, so it can never drift. For reads whose
+      * key set is already a driver value (a fixed metadata key, a
+      * driver-planned segment list): turns the bucket-id projection job
+      * into arithmetic.
+      */
+    def bucketIdOf(keys: Any*): Int = {
+      import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+      val h = new XxHash64(keys.map(k => Literal(k)), 42L)
+        .eval(org.apache.spark.sql.catalyst.InternalRow.empty)
+        .asInstanceOf[Long]
+      (((h % numBuckets) + numBuckets) % numBuckets).toInt
+    }
   }
 
   private val locks =
@@ -654,51 +599,45 @@ object SnapshotSink {
     */
   @volatile private[graft] var elisionProbe: Option[(String, Boolean) => Unit] = None
 
-  /** A read-only view over ONE committed manifest (see [[SnapshotSink.pin]]).
-    * Every read here is lock-free and filesystem-metadata-free: the
-    * bucket→generation map was captured at pin time and the generation
-    * directories are immutable.
+  /** A read-only view over ONE committed manifest (see [[SnapshotSink.pin]])
+    * — the one reader behind every sink read. Every read here is
+    * lock-free and filesystem-metadata-free: the bucket→generation map
+    * was captured at pin time and the generation directories are
+    * immutable.
     */
   final class Pinned private[sinks] (spark: SparkSession, dataPath: String,
-      buckets: Map[Int, Long], bucketCols: Seq[String], numBuckets: Int) {
+      buckets: Map[Int, Long], bucketCols: Seq[String], numBuckets: Int)
+      extends BucketLayout(bucketCols, numBuckets) {
 
-    /** Same hash as the owning sink's [[SnapshotSink.bucketIds]] — ONE
-      * driver collect, shareable across layout-identical pinned sinks.
+    /** Live rows of the `wanted` buckets; the full relation is built
+      * only when none is committed, to keep the snapshot's schema.
       */
-    def bucketIds(keys: DataFrame): Set[Int] = keys
-      .select(bucketIdExpr().as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-
-    /** Same as [[SnapshotSink.bucketIdExpr]] — the fusable form of the
-      * bucket-id projection.
-      */
-    def bucketIdExpr(keys: org.apache.spark.sql.Column*): org.apache.spark.sql.Column = {
-      val ks = if (keys.nonEmpty) keys else bucketCols.map(col)
-      pmod(xxhash64(ks: _*), lit(numBuckets)).cast("int")
-    }
-
-    def bucketIdOf(keys: Any*): Int = SnapshotSink.bucketIdOf(numBuckets, keys: _*)
-
     def readBucketIds(wanted: Set[Int]): DataFrame = {
-      val dirs = buckets.toSeq.sortBy(_._1)
-        .filter { case (b, _) => wanted(b) }
-        .map { case (b, g) => s"$dataPath/__bucket=$b/__gen=$g" }
-      val pruned =
-        if (dirs.isEmpty) readAll().filter(lit(false))
-        else spark.read.option("basePath", dataPath).parquet(dirs: _*).drop("__gen")
-      pruned.filter(!col("__deleted")).drop("__seq", "__deleted", "__bucket")
+      val hit = buckets.filter { case (b, _) => wanted(b) }
+      live(if (hit.isEmpty) committed().filter(lit(false)) else scan(hit))
     }
 
     def readBuckets(keys: DataFrame): DataFrame = readBucketIds(bucketIds(keys))
 
-    def readAll(): DataFrame = {
-      val dirs = buckets.toSeq.sortBy(_._1).map { case (b, g) =>
+    def readAll(): DataFrame = live(committed())
+
+    /** Every committed row, tombstones, `__seq` and `__bucket` included. */
+    private[sinks] def committed(): DataFrame = {
+      require(buckets.nonEmpty, s"snapshot at $dataPath committed with zero buckets")
+      scan(buckets)
+    }
+
+    private def scan(bs: Map[Int, Long]): DataFrame = {
+      val dirs = bs.toSeq.sortBy(_._1).map { case (b, g) =>
         s"$dataPath/__bucket=$b/__gen=$g"
       }
       spark.read.option("basePath", dataPath).parquet(dirs: _*).drop("__gen")
-        .filter(!col("__deleted")).drop("__seq", "__deleted", "__bucket")
     }
+
+    private def live(rows: DataFrame): DataFrame =
+      rows.filter(!col("__deleted")).drop("__seq", "__deleted", "__bucket")
   }
+
 
   /** True iff the frame's plan is only narrow, deterministic operators
     * (Project/Filter/Union/aliases) over already-materialized leaves

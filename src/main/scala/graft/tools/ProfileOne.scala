@@ -7,12 +7,11 @@ import graft.core.Engine
   * the harness for decomposing a single headliner's cost (pair with
   * GRAFT_PROF=1 to see the per-phase breakdown from [[graft.core.Prof]]).
   *
-  * The pass loop mirrors [[graft.Bench]] exactly — noop-write
-  * materialization, then post-clock hygiene (clearCache + System.gc so
-  * the ContextCleaner releases the pass's localCheckpoint blocks) — so a
-  * pass-over-pass growth shape seen here is the same accumulation the
-  * bench's `inverted` classifier flags, and its per-pass phase totals
-  * say WHERE the growth lives. GRAFT_PROFONE_NO_HYGIENE=1 disables the
+  * Each pass is a noop-write materialization, then post-clock hygiene
+  * (clearCache + System.gc so the ContextCleaner releases the pass's
+  * localCheckpoint blocks) — so a pass-over-pass growth shape seen here
+  * is real accumulation, and its per-pass phase totals say WHERE the
+  * growth lives. GRAFT_PROFONE_NO_HYGIENE=1 disables the
   * hygiene step to A/B its effect (the r08 PageRank accumulation repro).
   *
   * Usage: runMain graft.tools.ProfileOne <name> [sfDir] [passes]

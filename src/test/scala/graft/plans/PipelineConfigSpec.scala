@@ -179,6 +179,19 @@ class PipelineConfigSpec extends SparkSpec {
       // produce ran on executor tasks (client ids stamp the task id)
       assert(scala.jdk.CollectionConverters.SetHasAsScala(broker.clientIds)
         .asScala.forall(_.startsWith("graft-exec-")))
+      // both transports ship one record frame: the same batch through a
+      // kafka-file sink with the same partitions and topic yields each
+      // broker partition's value sequence as that partition's file log
+      val dir = java.nio.file.Files.createTempDirectory("cfg-kafka-twin").toString
+      val file = PipelineConfig.parseSink(spark,
+        s"""{"type":"kafka-file","path":"$dir","partitions":2,"topic":"t-orders"}""",
+        Seq("id")).asInstanceOf[graft.sinks.KafkaFileBatchSink]
+      file.write(0L, env)
+      val wire = scala.jdk.CollectionConverters.MapHasAsScala(broker.log).asScala
+        .map { case ((_, part), buf) =>
+          part.toLong -> buf.map { case (_, v) => new String(v, "UTF-8") }.toSeq }
+        .toMap
+      assert(file.partitions.map(p => p -> file.partitionLog(p)).toMap == wire)
     } finally broker.close()
   }
 
