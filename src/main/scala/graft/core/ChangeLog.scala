@@ -143,6 +143,9 @@ object ChangeLog {
     */
   def partitionByKey(log: DataFrame, pkCols: Seq[String], numPartitions: Option[Int] = None): DataFrame = {
     val parts = numPartitions.getOrElse(log.sparkSession.sessionState.conf.numShufflePartitions)
-    log.repartition(parts, depHash(pkCols)).sortWithinPartitions(col("seq"))
+    // one partition holds every key whatever the hash: a narrow coalesce
+    // places the rows without an exchange (a job of its own under AQE)
+    val placed = if (parts == 1) log.coalesce(1) else log.repartition(parts, depHash(pkCols))
+    placed.sortWithinPartitions(col("seq"))
   }
 }

@@ -26,13 +26,15 @@ import org.apache.spark.sql.types.StructType
   *      swallowing `ignorableErrnos` (idempotent-replay duplicates, the
   *      same set mysql.go tolerates on DDL/PK replays).
   *
-  * Scale shape: no driver-side row buffering — the only driver work is the
-  * per-target branch loop over the *configured* route targets. Each
-  * executor partition holds complete keys (pk-hash partitioning), so
-  * per-key statement order is preserved without any global coordination,
-  * and N partitions write through N connections — the reference's
-  * worker-pool parallelism (batch_table_scheduler.go:213-275) expressed as
-  * data parallelism.
+  * Scale shape: no driver-side row buffering — the only driver work is one
+  * narrow pass that finds which *configured* route targets the batch
+  * holds, then one write per present target, the targets written
+  * concurrently. Each executor partition holds complete keys (pk-hash
+  * partitioning), so per-key statement order is preserved without any
+  * global coordination, and N partitions write through N connections —
+  * the reference's worker-pool parallelism
+  * (batch_table_scheduler.go:213-275) expressed as data parallelism. A
+  * partition with no rows opens no connection.
   */
 final class JdbcBatchSink(
     executorFactory: () => StatementExecutor,
@@ -57,32 +59,58 @@ final class JdbcBatchSink(
     if (!hasRouting) {
       require(targets.size == 1,
         "unrouted batch needs exactly one configured target")
-      writeTable(targets.head, compacted)
+      // an empty batch neither introspects nor writes the target
+      if (!compacted.isEmpty) writeTable(targets.head, compacted)
     } else {
-      // targets come from the route CONFIG, not from the data — the
-      // data-scan fallback is Bounded so a poisoned stream cannot mint
-      // unbounded write targets (Router.fanOut's discipline)
-      val tgts = if (targets.nonEmpty) targets
-        else graft.core.Bounded.collect(
-          compacted.select(col("tgt_schema"), col("tgt_table")).distinct(),
-          10000, "JdbcBatchSink/target-scan",
-          "configure the route targets so fan-out is config-bounded; a " +
-            "poisoned stream must not mint write targets")
-          .map(r => (r.getString(0), r.getString(1))).toSeq
-      // materialize once: each target branch re-reads the batch (filter +
-      // write), and without a cache that re-runs the upstream compaction
-      // lineage per target
-      val src = if (tgts.size > 1) compacted.persist() else compacted
-      try {
-        tgts.foreach { t =>
-          val branch = src
-            .filter(col("tgt_schema") === t._1 && col("tgt_table") === t._2)
-            .drop("tgt_schema", "tgt_table")
-          writeTable(t, branch)
-        }
-      } finally if (tgts.size > 1) { src.unpersist(); () }
+      // materialize once: the target pass and each target branch re-read
+      // the batch, and without a copy that re-runs the upstream compaction
+      // lineage per read — unless the caller already materialized it
+      // (CompositeSink hands every sink a checkpointed batch)
+      val copy = targets.size != 1 && !SnapshotSink.isMaterializedShallow(compacted)
+      val src = if (copy) compacted.persist() else compacted
+      try writeRouted(src, if (targets.nonEmpty) present(src) else scanTargets(src))
+      finally if (copy) { src.unpersist(); () }
     }
   }
+
+  /** Targets come from the route CONFIG, not from the data — this
+    * data-scan fallback is Bounded so a poisoned stream cannot mint
+    * unbounded write targets (Router.fanOut's discipline).
+    */
+  private def scanTargets(batch: DataFrame): Seq[(String, String)] =
+    graft.core.Bounded.collect(
+      batch.select(col("tgt_schema"), col("tgt_table")).distinct(),
+      10000, "JdbcBatchSink/target-scan",
+      "configure the route targets so fan-out is config-bounded; a " +
+        "poisoned stream must not mint write targets")
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+
+  /** The configured targets the batch holds rows for — ONE narrow job over
+    * each row's index into `targets` (null for none), instead of an
+    * emptiness probe per target. A target absent from the batch is
+    * neither introspected nor written.
+    */
+  private def present(batch: DataFrame): Seq[(String, String)] = {
+    val cases = targets.zipWithIndex.map { case ((schema, table), i) =>
+      (col("tgt_schema") === schema && col("tgt_table") === table, i)
+    }
+    val targetIndex = cases.tail.foldLeft(when(cases.head._1, cases.head._2)) {
+      case (c, (matches, i)) => c.when(matches, i)
+    }
+    val hit = graft.core.Fused.intSet(batch, targetIndex)
+    targets.zipWithIndex.collect { case (t, i) if hit(i) => t }
+  }
+
+  /** Write each target's branch of the batch, the targets concurrently:
+    * they are different tables, each written in per-key order by its own
+    * partitions.
+    */
+  private def writeRouted(src: DataFrame, tgts: Seq[(String, String)]): Unit =
+    graft.core.Par.run(tgts.map { t => () =>
+      writeTable(t, src
+        .filter(col("tgt_schema") === t._1 && col("tgt_table") === t._2)
+        .drop("tgt_schema", "tgt_table"))
+    }: _*)
 
   /** `schema`.`table` rendered with the engine's own identifier dialect —
     * quoted/validated by the engine: when `targets` is unconfigured these
@@ -91,7 +119,6 @@ final class JdbcBatchSink(
   private def fqn(t: (String, String)): String = engine.qualify(t._1, t._2)
 
   private def writeTable(target: (String, String), branch: DataFrame): Unit = {
-    if (branch.isEmpty) return
     val reconciled = targetSchemas.get(target)
       .orElse(schemaFor.map(f => f(target._1, target._2))) match {
       case Some(ts) =>
@@ -123,37 +150,39 @@ final class JdbcBatchSink(
       (engine, pkCols, ignorableErrnos, maxRowsPerStatement, executorFactory, txnTagger)
 
     ordered.foreachPartition { (it: Iterator[Row]) =>
-      val exec = factory()
-      try {
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-        def execIgnoring(stmt: RenderedStatement): Unit =
-          try exec.execute(stmt)
-          catch {
-            case e: java.sql.SQLException if errnos(e.getErrorCode) => ()
-          }
-        def flushWrites(): Unit = if (buf.nonEmpty) {
-          eng.renderWrites(table, writeSchema, buf.toSeq).foreach(execIgnoring)
-          buf.clear()
-        }
-        def writeAll(): Unit = {
-          it.foreach { r =>
-            if (r.getAs[String]("op") == ChangeLog.Delete) {
-              flushWrites() // deletes always run alone (mysql.go:452-482)
-              execIgnoring(eng.renderDelete(table, pk, pk.map(r.getAs[Any](_))))
-            } else {
-              buf += r
-              if (buf.size >= maxRows) flushWrites()
+      if (it.hasNext) {
+        val exec = factory()
+        try {
+          val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+          def execIgnoring(stmt: RenderedStatement): Unit =
+            try exec.execute(stmt)
+            catch {
+              case e: java.sql.SQLException if errnos(e.getErrorCode) => ()
             }
+          def flushWrites(): Unit = if (buf.nonEmpty) {
+            eng.renderWrites(table, writeSchema, buf.toSeq).foreach(execIgnoring)
+            buf.clear()
           }
-          flushWrites()
-        }
-        tagger match {
-          // marker row + data statements commit atomically, so the tailer
-          // of the target sees the tag in the same transaction
-          case Some(t) => exec.transactional { exec.execute(t.render()); writeAll() }
-          case None => writeAll()
-        }
-      } finally exec.close()
+          def writeAll(): Unit = {
+            it.foreach { r =>
+              if (r.getAs[String]("op") == ChangeLog.Delete) {
+                flushWrites() // deletes always run alone (mysql.go:452-482)
+                execIgnoring(eng.renderDelete(table, pk, pk.map(r.getAs[Any](_))))
+              } else {
+                buf += r
+                if (buf.size >= maxRows) flushWrites()
+              }
+            }
+            flushWrites()
+          }
+          tagger match {
+            // marker row + data statements commit atomically, so the tailer
+            // of the target sees the tag in the same transaction
+            case Some(t) => exec.transactional { exec.execute(t.render()); writeAll() }
+            case None => writeAll()
+          }
+        } finally exec.close()
+      }
     }
   }
 }

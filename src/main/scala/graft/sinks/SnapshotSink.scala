@@ -3,6 +3,7 @@ package graft.sinks
 import graft.core.ChangeLog
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Parquet snapshot sink: maintains a materialized table from change
   * batches — the harness-friendly stand-in for an upsert-capable store
@@ -159,7 +160,11 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
   private[sinks] case class Manifest(
       version: Long,
       buckets: Map[Int, Long], // bucket id -> committed generation
-      applied: List[(Long, Long)]) // applied batch ids, inclusive ranges
+      applied: List[(Long, Long)], // applied batch ids, inclusive ranges
+      // the generation files' schema (data columns, __seq, __deleted); a
+      // manifest written before it was recorded has none and its reads
+      // infer it
+      schema: Option[StructType])
 
   private def currentManifest(): Option[Manifest] = {
     val fs = hfs
@@ -180,16 +185,20 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
     var v = -1L
     val buckets = Map.newBuilder[Int, Long]
     val applied = List.newBuilder[(Long, Long)]
+    var schema = Option.empty[StructType]
     text.split("\n").map(_.trim).filter(_.nonEmpty).foreach { line =>
       line.split(" ") match {
         case Array("version", n) => v = n.toLong
         case Array("bucket", b, g) => buckets += b.toInt -> g.toLong
         case Array("applied", lo, hi) => applied += ((lo.toLong, hi.toLong))
+        // one-line JSON, which may hold spaces in column names
+        case Array("schema", _*) =>
+          schema = Some(DataType.fromJson(line.stripPrefix("schema ")).asInstanceOf[StructType])
         case other => sys.error(s"corrupt snapshot manifest v$version: line '$line'")
       }
     }
     require(v == version, s"snapshot manifest v$version declares version $v")
-    Manifest(v, buckets.result(), applied.result())
+    Manifest(v, buckets.result(), applied.result(), schema)
   }
 
   /** THE commit point: stage the manifest text, then one atomic rename.
@@ -208,6 +217,7 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
     m.applied.foreach { case (lo, hi) =>
       sb.append("applied ").append(lo).append(' ').append(hi).append('\n')
     }
+    m.schema.foreach(st => sb.append("schema ").append(st.json).append('\n'))
     val out = fs.create(tmp, true)
     try out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
@@ -236,8 +246,8 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
     * id appears among the keys' hashes are listed and read, so a
     * frontier/probe-sized key set reads O(|keys|) buckets, not the whole
     * sink. `keys` must carry the sink's `bucketBy` columns (default: the
-    * full pk). The bucket-id projection of `keys` is a ≤ numBuckets-row
-    * driver collect (same bound as merge's touched-bucket list). Callers
+    * full pk). The bucket-id projection of `keys` is one narrow job
+    * ([[bucketIds]]), the same as merge's touched-bucket set. Callers
     * still equi-/semi-join the exact keys — this prunes I/O, it does not
     * filter rows. Same one-merge read grace as read().
     */
@@ -256,8 +266,7 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
     */
   def pin(): SnapshotSink.Pinned = swapLock.synchronized {
     recover()
-    pinned(currentManifest()
-      .getOrElse(sys.error(s"snapshot at $path does not exist")).buckets)
+    pinned(currentManifest().getOrElse(sys.error(s"snapshot at $path does not exist")))
   }
 
   /** [[readBuckets]] with a precomputed bucket-id set (from
@@ -278,8 +287,10 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
   private def reading(read: SnapshotSink.Pinned => DataFrame): DataFrame =
     swapLock.synchronized(read(pin()))
 
-  private def pinned(buckets: Map[Int, Long]): SnapshotSink.Pinned =
-    new SnapshotSink.Pinned(spark, dataPath, buckets, bucketCols, numBuckets)
+  private def pinned(m: Manifest): SnapshotSink.Pinned = pinned(m.buckets, m.schema)
+
+  private def pinned(buckets: Map[Int, Long], schema: Option[StructType]): SnapshotSink.Pinned =
+    new SnapshotSink.Pinned(spark, dataPath, buckets, schema, bucketCols, numBuckets)
 
   /** True iff `batchId` is recorded in the current committed manifest.
     * For foreachBatch bodies that write SIDE artifacts next to the sink
@@ -413,7 +424,8 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
     }
 
   /** The batch in the stored row layout: data columns plus `__seq`,
-    * `__deleted` and `__bucket`.
+    * `__deleted` and `__bucket`, and the ids of the buckets it touches
+    * when the copy below already saw them.
     *
     * Materialized ONCE: the batch feeds the touched-bucket projection
     * AND the merge window+write — without this every merge computes
@@ -427,9 +439,10 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
     * stable in-memory blocks with no file reads to race GC, and
     * re-evaluating a Project twice is cheaper than writing a second full
     * copy of the batch. Detected structurally, never trusted from the
-    * caller.
+    * caller. The touched-bucket set rides on the copy's job
+    * (Fused.checkpointIntSet).
     */
-  private def normalize(batch: DataFrame): DataFrame = {
+  private def normalize(batch: DataFrame): (DataFrame, Option[Set[Int]]) = {
     val dataCols = batch.columns.filterNot(c => c == "op" || c == "seq").toSeq
     val normalized = batch.select(
       (dataCols.map(col) :+ col("seq").as("__seq") :+
@@ -437,19 +450,24 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
       .withColumn("__bucket", bucketIdExpr())
     val shallow = SnapshotSink.isMaterializedShallow(batch)
     SnapshotSink.elisionProbe.foreach(_(path, shallow))
-    if (shallow) normalized else normalized.localCheckpoint()
+    if (shallow) (normalized, None)
+    else {
+      val (copy, touched) = graft.core.Fused.checkpointIntSet(normalized, col("__bucket"))
+      (copy, Some(touched))
+    }
   }
 
   /** The one write path of merge and replace, run under [[swapLock]]:
     * normalize, stage every bucket the new state writes as generation
     * v(n+1), commit the manifest, gc. The manifest maps `carried` (merge:
     * every current bucket; replace: none) plus the staged buckets, and
-    * records `batchId` in the applied ranges. The batch is seq-LWW
-    * merged with the committed rows of the carried buckets it touches.
+    * records `batchId` in the applied ranges and the stored schema, so
+    * reads need no schema-inference job. The batch is seq-LWW merged with
+    * the committed rows of the carried buckets it touches.
     */
   private def commit(batch: DataFrame, cur: Option[Manifest],
       carried: Map[Int, Long], batchId: Option[Long]): Unit = {
-    val normalized = normalize(batch)
+    val (normalized, seen) = normalize(batch)
     val fs = hfs
     val newVersion = cur.map(_.version + 1).getOrElse(1L)
     val curApplied = cur.map(_.applied).getOrElse(Nil)
@@ -458,10 +476,9 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
     val next =
       if (carried.isEmpty) lastPerKeyBucketed(normalized)
       else {
-        // touched bucket ids: bounded by numBuckets, driver-safe to collect
+        // without a copy, one narrow job over the batch
         val touched = graft.core.Prof.time("sink/touched") {
-          normalized.select(col("__bucket")).distinct()
-            .collect().map(_.getInt(0)).sorted
+          seen.getOrElse(graft.core.Fused.intSet(normalized, col("__bucket"))).toSeq.sorted
         }
         if (touched.isEmpty) {
           // nothing to stage — but an id-carrying empty batch still
@@ -471,14 +488,14 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
           // non-empty merge)
           if (batchId.isDefined) {
             recovered.set(false) // dirty until the commit+gc walk completes
-            val m = Manifest(newVersion, carried, applied)
+            val m = Manifest(newVersion, carried, applied, cur.flatMap(_.schema))
             commitManifest(m)
             gc(m)
           }
           return
         }
         // manifest pruning keeps the read to the touched generations only
-        val existing = pinned(carried).committed()
+        val existing = pinned(carried, cur.flatMap(_.schema)).committed()
           .filter(col("__bucket").isin(touched.map(Int.box): _*))
         lastPerKeyBucketed(existing.unionByName(normalized))
       }
@@ -520,7 +537,8 @@ final class SnapshotSink(spark: SparkSession, path: String, pkCols: Seq[String],
       renameOrFail(fs, p(s"$stagingPath/__bucket=$b"), dst)
     }
     faultHook("staged")
-    val m = Manifest(newVersion, carried ++ staged.map(_ -> newVersion), applied)
+    val m = Manifest(newVersion, carried ++ staged.map(_ -> newVersion), applied,
+      Some(StructType(next.schema.filterNot(_.name == "__bucket"))))
     commitManifest(m)
     graft.core.Prof.time("sink/gc") { gc(m) }
   }
@@ -534,15 +552,13 @@ object SnapshotSink {
   sealed abstract class BucketLayout(protected val bucketCols: Seq[String],
       numBuckets: Int) {
 
-    /** The bucket ids `keys` hash to — ONE driver collect (≤ numBuckets
-      * rows). Computable once and shared across sinks with an identical
+    /** The bucket ids `keys` hash to — ONE narrow job (Fused.intSet).
+      * Computable once and shared across sinks with an identical
       * (bucketBy-arity, numBuckets) layout: a graph sink and its
       * reverse-adjacency twin read with the same frontier pay one job,
       * not two.
       */
-    def bucketIds(keys: DataFrame): Set[Int] = keys
-      .select(bucketIdExpr().as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    def bucketIds(keys: DataFrame): Set[Int] = graft.core.Fused.intSet(keys, bucketIdExpr())
 
     /** The bucket-id expression [[bucketIds]] collects, over `keys`
       * columns (default: the sink's bucketBy columns by name) — for fusing
@@ -606,7 +622,8 @@ object SnapshotSink {
     * immutable.
     */
   final class Pinned private[sinks] (spark: SparkSession, dataPath: String,
-      buckets: Map[Int, Long], bucketCols: Seq[String], numBuckets: Int)
+      buckets: Map[Int, Long], schema: Option[StructType], bucketCols: Seq[String],
+      numBuckets: Int)
       extends BucketLayout(bucketCols, numBuckets) {
 
     /** Live rows of the `wanted` buckets; the full relation is built
@@ -627,11 +644,16 @@ object SnapshotSink {
       scan(buckets)
     }
 
+    /** Given the manifest's schema the read plans without a
+      * schema-inference job; the partition columns are still appended
+      * from the directory names.
+      */
     private def scan(bs: Map[Int, Long]): DataFrame = {
       val dirs = bs.toSeq.sortBy(_._1).map { case (b, g) =>
         s"$dataPath/__bucket=$b/__gen=$g"
       }
-      spark.read.option("basePath", dataPath).parquet(dirs: _*).drop("__gen")
+      val reader = spark.read.option("basePath", dataPath)
+      schema.fold(reader)(reader.schema).parquet(dirs: _*).drop("__gen")
     }
 
     private def live(rows: DataFrame): DataFrame =

@@ -97,17 +97,29 @@ final class JdbcDdlExecutor(url: String, override val quote: String = "`")
   * to a relational target AND maintaining a snapshot in the same run (the
   * reference runs one output per pipeline; composing sinks is the Spark
   * equivalent of deploying two pipelines off one source, without reading
-  * the source twice). Sinks run in order; all are idempotent per key, so
-  * a failure partway is healed by the foreachBatch replay.
+  * the source twice).
+  *
+  * The batch is materialized ONCE, eagerly (localCheckpoint), and the
+  * sinks then run CONCURRENTLY over that one copy (graft.core.Par.run),
+  * the way the reference applies a batch through a pool of output workers
+  * (batch_table_scheduler.go:213-275). A micro-batch here is a chain of
+  * small driver-bound jobs, so overlapping the sinks' chains cuts its
+  * latency, and the checkpoint leaf lets each sink skip a defensive copy
+  * of its own (SnapshotSink.normalize). The workers inherit the caller's
+  * job group, so stopping the query cancels their jobs. A failing sink
+  * fails the batch after the other sinks finish; all are idempotent per
+  * key, so what the others applied is healed by the foreachBatch replay.
+  * The checkpoint's blocks are released when the fan-out returns. With
+  * one sink the batch goes straight through.
   */
 final class CompositeSink(sinks: Seq[BatchSink]) extends BatchSink {
-  def write(batchId: Long, compacted: DataFrame): Unit = {
-    // each sink triggers its own action on the batch frame — persist once
-    // so the upstream compaction lineage is not re-run per sink
-    val src = if (sinks.lengthCompare(1) > 0) compacted.persist() else compacted
-    try sinks.foreach(_.write(batchId, src))
-    finally if (sinks.lengthCompare(1) > 0) { src.unpersist(); () }
-  }
+  def write(batchId: Long, compacted: DataFrame): Unit =
+    if (sinks.lengthCompare(1) <= 0) sinks.foreach(_.write(batchId, compacted))
+    else {
+      val src = compacted.localCheckpoint()
+      try graft.core.Par.run(sinks.map(s => () => s.write(batchId, src)): _*)
+      finally graft.core.Fused.release(src)
+    }
 }
 
 /** Project the batch to `columns` (plus the op/seq/tgt bookkeeping) before

@@ -25,6 +25,34 @@ trait SparkSpec extends AnyFunSuite with DerbyEngineIsolation {
   def withStream[T](q: org.apache.spark.sql.streaming.StreamingQuery)(f: => T): T =
     try f finally q.stop()
 
+  /** Spark jobs started in job group `group`, counted by a listener. The
+    * listener bus is asynchronous and FIFO: a marker job run after `body`
+    * and seen by the listener means every earlier job start was delivered.
+    */
+  def jobsIn(group: String)(body: => Unit): Int = {
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val markerGroup = group + "-marker"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => seen.incrementAndGet(); ()
+          case Some(`markerGroup`) => marker.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(markerGroup, markerGroup)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+    } finally sc.removeSparkListener(listener)
+    seen.get
+  }
+
   /** transformWithState tests need the multi-column-family RocksDB state
     * store. The session is a shared getOrCreate singleton across suites
     * in one JVM, so the conf MUST be restored — a leaked provider would

@@ -34,6 +34,22 @@ class FusedSpec extends SparkSpec {
     assert(empty == Set.empty[Int], "collect_set over zero rows is the empty set")
   }
 
+  test("intSet collects the distinct non-null values; release drops the checkpoint's blocks") {
+    import spark.implicits._
+    val df = Seq(Some(3), Some(1), None, Some(3), Some(64)).toDF("x").repartition(3)
+    assert(Fused.intSet(df, col("x")) == Set(1, 3, 64))
+    assert(Fused.intSet(df.filter(col("x") > 99), col("x")) == Set.empty[Int])
+    val ck = df.localCheckpoint()
+    val rdd = ck.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+    assert(spark.sparkContext.getRDDStorageInfo.exists(_.id == rdd.id))
+    Fused.release(ck)
+    val deadline = System.nanoTime() + 30000000000L
+    while (spark.sparkContext.getRDDStorageInfo.exists(_.id == rdd.id) &&
+      System.nanoTime() < deadline) Thread.sleep(50)
+    assert(!spark.sparkContext.getRDDStorageInfo.exists(_.id == rdd.id))
+  }
+
   test("conditional count(when(...)) matches a filter-then-count on the same frame") {
     import spark.implicits._
     val df = Seq((1, true), (2, false), (3, true), (4, false), (5, false))

@@ -2,6 +2,7 @@ package graft.sinks
 
 import graft.SparkSpec
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Top-level (no outer-instance capture: Spark serializes task closures
   * even in local mode) recording logger — object singletons deserialize
@@ -16,6 +17,11 @@ private[sinks] object ConflictRecorder extends ConflictLogger {
 private[sinks] final class FlakyExec(errno: Int) extends StatementExecutor {
   def execute(stmt: RenderedStatement): Array[Int] =
     throw new java.sql.SQLException("boom", "XX000", errno)
+}
+
+/** Counts the executors a sink's partitions open (one per connection). */
+private[sinks] object ExecCounter {
+  val opened = new java.util.concurrent.atomic.AtomicInteger()
 }
 
 /** End-to-end tests for the assembled relational sink against embedded
@@ -125,6 +131,64 @@ class JdbcBatchSinkSpec extends SparkSpec {
       rs.next()
       assert(rs.getString(1) == null && rs.getLong(2) >= 1L)
     } finally c.close()
+  }
+
+  test("a configured target absent from the batch is neither introspected nor connected to") {
+    val url = freshDb()
+    sql(url, "CREATE TABLE hot (id BIGINT PRIMARY KEY, v VARCHAR(16))")
+    // "idle" has no table at all: introspecting or writing it would fail
+    val introspected = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val fetch = graft.core.JdbcSchemaIntrospector.writableFetch(() =>
+      java.sql.DriverManager.getConnection(url))
+    val sink = new JdbcBatchSink(
+      () => { ExecCounter.opened.incrementAndGet(); new JdbcStatementExecutor(url) },
+      AnsiMergeEngine(Seq("id")), Seq("id"),
+      targets = Seq(("", "idle"), ("", "hot")),
+      schemaFor = Some((db, table) => { introspected.add(table); fetch(db, table) }),
+      numWriters = Some(4))
+    val log = Seq((1L, "insert", 7L, "x", "", "hot"))
+      .toDF("seq", "op", "id", "v", "tgt_schema", "tgt_table")
+    ExecCounter.opened.set(0)
+    sink.write(0L, log)
+    assert(queryPairs(url, "SELECT id, v FROM hot") == Map(7L -> "x"))
+    assert(introspected.asScala.toSeq == Seq("hot"))
+    // four writer partitions, one holding the row: one connection
+    assert(ExecCounter.opened.get == 1)
+  }
+
+  test("routed targets written concurrently converge to a sequential per-target write") {
+    val (together, apart) = (freshDb(), freshDb())
+    Seq(together, apart).foreach(u => sql(u,
+      "CREATE TABLE ta (id BIGINT PRIMARY KEY, v VARCHAR(16))",
+      "CREATE TABLE tb (id BIGINT PRIMARY KEY, v VARCHAR(16))"))
+    val targets = Seq(("", "ta"), ("", "tb"))
+    def sink(url: String, ts: Seq[(String, String)]) = new JdbcBatchSink(
+      () => new JdbcStatementExecutor(url), AnsiMergeEngine(Seq("id")), Seq("id"),
+      targets = ts)
+    val rnd = new scala.util.Random(7)
+    var seq = 0L
+    val batches = (0 until 3).map { _ =>
+      (1 to 120).map { _ =>
+        seq += 1
+        val op = Seq("insert", "update", "update", "delete")(rnd.nextInt(4))
+        (seq, op, rnd.nextInt(40).toLong, s"v$seq", "", if (rnd.nextBoolean()) "ta" else "tb")
+      }
+    }
+    batches.zipWithIndex.foreach { case (rows, b) =>
+      val batch = graft.core.ChangeLog.lastPerKey(
+        rows.toDF("seq", "op", "id", "v", "tgt_schema", "tgt_table"),
+        Seq("tgt_schema", "tgt_table", "id"))
+      sink(together, targets).write(b.toLong, batch)
+      targets.foreach(t => sink(apart, Seq(t)).write(b.toLong, batch))
+    }
+    // last writer wins per (table, id); a final delete removes the key
+    val expected = batches.flatten.groupBy(r => (r._6, r._3)).toSeq
+      .map { case (k, rs) => k -> rs.maxBy(_._1) }
+      .collect { case ((t, id), r) if r._2 != "delete" => (t, id) -> r._4 }.toMap
+    def state(url: String) = Seq("ta", "tb").flatMap(t =>
+      queryPairs(url, s"SELECT id, v FROM $t").map { case (id, v) => (t, id) -> v }).toMap
+    assert(state(together) == state(apart))
+    assert(state(together) == expected)
   }
 
   // ---- conflict-detect execution loop (conflict_engine.go:113-200) -------

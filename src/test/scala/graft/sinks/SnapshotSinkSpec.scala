@@ -497,6 +497,44 @@ class SnapshotSinkSpec extends SparkSpec {
       "the same leaf, checkpointed, skips the copy")
   }
 
+  test("the manifest records the stored schema; an old manifest without it still reads") {
+    val path = tmp()
+    val sink = new SnapshotSink(spark, path, Seq("id"), numBuckets = 4)
+    sink.merge(log((1, "insert", 1, "a"), (2, "insert", 2, "b"), (3, "insert", 3, "c")))
+    sink.merge(log((4, "update", 1, "a2"), (5, "delete", 3, "c")))
+    def manifests = Files.list(Paths.get(path, "manifest")).iterator().asScala.toList
+      .filter(_.getFileName.toString.startsWith("v"))
+    assert(manifests.size == 1)
+    val text = new String(Files.readAllBytes(manifests.head), "UTF-8")
+    val schemaLine = text.linesIterator.find(_.startsWith("schema ")).getOrElse(
+      fail(s"no schema line in the manifest:\n$text"))
+    assert(org.apache.spark.sql.types.DataType.fromJson(schemaLine.stripPrefix("schema "))
+      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq ==
+      Seq("id", "v", "__seq", "__deleted"))
+    assert(jobsIn("snapshot-read-plan")(sink.read()) == 0,
+      "a read with the recorded schema plans without an inference job")
+    val expected = Map(1L -> "a2", 2L -> "b")
+    val internal = sink.readInternal()
+    assert(sink.read().select("id", "v").as[(Long, String)].collect().toMap == expected)
+
+    // the layout written before the schema line existed (its checksum
+    // file goes too, or the local filesystem rejects the edited bytes)
+    Files.delete(manifests.head.resolveSibling(s".${manifests.head.getFileName}.crc"))
+    Files.write(manifests.head, text.linesIterator.filterNot(_.startsWith("schema "))
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
+    SnapshotSink.simulateRestartFor(path)
+    val reader = new SnapshotSink(spark, path, Seq("id"), numBuckets = 4)
+    assert(reader.read().select("id", "v").as[(Long, String)].collect().toMap == expected)
+    // inference reads the same columns and types, bookkeeping included
+    assert(reader.readInternal().schema == internal.schema)
+    // and a merge on top of the old manifest writes a schema line again
+    reader.merge(log((6, "insert", 4, "d")))
+    assert(reader.read().select("id", "v").as[(Long, String)].collect().toMap ==
+      expected + (4L -> "d"))
+    assert(manifests.exists(f =>
+      new String(Files.readAllBytes(f), "UTF-8").contains("\nschema ")))
+  }
+
   test("Ranges: add/contains compact adjacent and out-of-order ids") {
     import SnapshotSink.Ranges
     var rs = List.empty[(Long, Long)]

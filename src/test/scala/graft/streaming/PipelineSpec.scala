@@ -6,6 +6,7 @@ import graft.operators.{AcceptFilter, SchemaMatcher}
 import graft.sources.{FileChangeLogSource, TwoStageSource}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -241,6 +242,141 @@ class PipelineSpec extends SparkSpec {
     assert(tracker.lagMs.exists(l => l >= 1500 && l < 120000))
     // the probe was measured-then-dropped: only the real row reached the sink
     assert(sink.read().select("id").as[Long].collect().toSeq == Seq(1L))
+  }
+
+  test("CompositeSink: a failing sink fails the batch only after the other sink finished") {
+    val boom = new IllegalStateException("sink a failed")
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failing = new BatchSink {
+      def write(batchId: Long, df: org.apache.spark.sql.DataFrame): Unit = throw boom
+    }
+    val slow = new BatchSink {
+      def write(batchId: Long, df: org.apache.spark.sql.DataFrame): Unit = {
+        Thread.sleep(500)
+        assert(df.count() == 2)
+        finished.set(true)
+      }
+    }
+    val e = intercept[IllegalStateException] {
+      new CompositeSink(Seq(failing, slow)).write(0, logDf(
+        (1, "insert", "db0", 1, "a"), (2, "insert", "db0", 2, "b")))
+    }
+    assert(e eq boom)
+    assert(finished.get, "write returned before the other sink finished")
+  }
+
+  test("CompositeSink: every sink's jobs run in the caller's job group and cancel with it") {
+    val group = "composite-group"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val counting = new BatchSink {
+      def write(batchId: Long, df: org.apache.spark.sql.DataFrame): Unit = {
+        groups.add(df.sparkSession.sparkContext.getLocalProperty("spark.jobGroup.id"))
+        df.count(); ()
+      }
+    }
+    val batch = ChangeLog.lastPerKey(logDf(
+      (1, "insert", "db0", 1, "a"), (2, "update", "db0", 1, "b")), Seq("id"))
+    val jobs = jobsIn(group)(new CompositeSink(Seq(counting, counting)).write(0, batch))
+    assert(groups.asScala.toSeq == Seq(group, group))
+    assert(jobs >= 3, s"the checkpoint and one count per sink, saw $jobs jobs in the group")
+
+    // cancelling the group (what StreamingQuery.stop() does to its batch)
+    // stops both sinks' running jobs and fails the write
+    val blocking = new BatchSink {
+      def write(batchId: Long, df: org.apache.spark.sql.DataFrame): Unit =
+        df.sparkSession.range(0, 2, 1, 2).foreach(_ => Thread.sleep(60000))
+    }
+    val sc = spark.sparkContext
+    val canceller = new Thread(() => {
+      Thread.sleep(2000)
+      sc.cancelJobGroup("composite-cancel")
+    })
+    canceller.start()
+    val t0 = System.nanoTime()
+    sc.setJobGroup("composite-cancel", "composite-cancel", interruptOnCancel = true)
+    try intercept[Exception](new CompositeSink(Seq(blocking, blocking)).write(0, batch))
+    finally sc.clearJobGroup()
+    canceller.join()
+    assert((System.nanoTime() - t0) / 1e9 < 30, "the cancelled sinks kept running")
+  }
+
+  test("CompositeSink: a SnapshotSink inside it merges without a copy of its own") {
+    val elided = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    graft.sinks.SnapshotSink.elisionProbe = Some((_, e) => { elided.add(e); () })
+    try {
+      val batch = ChangeLog.lastPerKey(logDf(
+        (1, "insert", "db0", 1, "a"), (2, "insert", "db0", 2, "b"),
+        (3, "update", "db0", 1, "a2")), Seq("id"))
+      val alone = new SnapshotBatchSink(spark, tmp() + "/alone", Seq("id"))
+      alone.write(0, batch)
+      assert(elided.asScala.toSeq == Seq(false), "a window plan alone needs the copy")
+      elided.clear()
+      val snap = new SnapshotBatchSink(spark, tmp() + "/snap", Seq("id"))
+      val other = new BatchSink {
+        def write(batchId: Long, df: org.apache.spark.sql.DataFrame): Unit = { df.count(); () }
+      }
+      new CompositeSink(Seq(snap, other)).write(0, batch)
+      assert(elided.asScala.toSeq == Seq(true))
+      assert(snap.read().select("id", "v").as[(Long, String)].collect().toSet ==
+        Set((1L, "a2"), (2L, "b")))
+    } finally graft.sinks.SnapshotSink.elisionProbe = None
+  }
+
+  /** Batch time on this driver-bound path follows the number of Spark
+    * jobs a micro-batch runs, so the count is pinned: 8 jobs = the
+    * CompositeSink checkpoint (the compaction exchange + the checkpoint),
+    * the snapshot's touched-bucket pass and bucketed write (exchange +
+    * write), the jdbc sink's target-presence pass and one single-writer
+    * write per target.
+    */
+  test("one snapshot + jdbc micro-batch stays within its Spark job budget") {
+    val work = tmp()
+    val url = s"jdbc:derby:memory:pjobs${System.nanoTime()};create=true"
+    val c = java.sql.DriverManager.getConnection(url)
+    try Seq("t_a", "t_b").foreach(t => c.createStatement().execute(
+      s"CREATE TABLE $t (id BIGINT PRIMARY KEY, v VARCHAR(16))"))
+    finally c.close()
+    val plan = graft.plans.PipelineConfig.parse(
+      s"""{"name": "p-jobs", "pk": ["id"], "checkpoint": "$work/ckpt",
+         | "filters": [{"type": "accept", "match-schema": "db*"}],
+         | "routes": [
+         |   {"match-schema": "db0", "target-schema": "", "target-table": "t_a"},
+         |   {"match-schema": "db1", "target-schema": "", "target-table": "t_b"}]}""".stripMargin)
+    val sink = graft.plans.PipelineConfig.parseSinks(spark,
+      s"""[{"type": "snapshot", "path": "$work/snap", "buckets": 4, "pk": ["tgt_table", "id"]},
+         | {"type": "jdbc", "url": "$url", "engine": "ansi-merge",
+         |  "targets": [["", "t_a"], ["", "t_b"]], "introspect-schemas": true,
+         |  "num-writers": 1}]""".stripMargin, plan.pkCols)
+    val schema = "seq BIGINT, op STRING, database STRING, table STRING, id BIGINT, v STRING"
+    def batch(k: Int, rows: Seq[(Long, String, String, String, Long, String)]) = {
+      rows.toDF("seq", "op", "database", "table", "id", "v").coalesce(1)
+        .write.parquet(s"$work/log/$k")
+      spark.read.schema(schema).parquet(s"$work/log/$k")
+    }
+    // the first batch creates the snapshot; the second is the steady state
+    PipelineRunner.applyBatch(plan, sink)(batch(0, (1L to 40L).map(i =>
+      (i, "insert", s"db${i % 2}", "t", i, s"v$i"))), 0)
+    val second = batch(1, (41L to 80L).map(i =>
+      (i, if (i % 5 == 0) "delete" else "update", s"db${i % 2}", "t", i - 40, s"w$i")))
+    val jobs = jobsIn("pipeline-job-budget") {
+      PipelineRunner.applyBatch(plan, sink)(second, 1)
+    }
+    assert(jobs <= 8, s"a snapshot + jdbc micro-batch ran $jobs Spark jobs, budget 8")
+    // second-batch row i updates (or, every fifth, deletes) key i - 40,
+    // whose schema, and so its routed table, has the parity of i
+    val want = (1L to 40L).filter(_ % 5 != 0)
+      .map(i => (if (i % 2 == 0) "t_a" else "t_b", i, s"w${i + 40}")).toSet
+    assert(new graft.sinks.SnapshotSink(spark, s"$work/snap", Seq("tgt_table", "id"), 4).read()
+      .select("tgt_table", "id", "v").as[(String, Long, String)].collect().toSet == want)
+    val c2 = java.sql.DriverManager.getConnection(url)
+    try {
+      val got = Seq("t_a", "t_b").flatMap { t =>
+        val rs = c2.createStatement().executeQuery(s"SELECT id, v FROM $t")
+        Iterator.continually(rs).takeWhile(_.next())
+          .map(r => (t, r.getLong(1), r.getString(2))).toList
+      }.toSet
+      assert(got == want)
+    } finally c2.close()
   }
 
   test("positions: last committed batch readable from checkpoint, reset clears") {
