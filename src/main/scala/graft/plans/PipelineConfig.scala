@@ -104,14 +104,25 @@ object PipelineConfig {
     if (v.isArray) v.elements().asScala.map(_.asText()).toSeq else Seq(v.asText())
 
   /** `input` section → streaming source DataFrame (the reference's
-    * `[input]` TOML block, config_v3.go:44-70):
+    * `[input]` TOML block, config_v3.go:44-70). Input types: cdc-rate,
+    * mysql-stream, kafka-stream, mongo-stream (the DataSourceV2 stream
+    * sources) and file-changelog:
     *
     * {{{
     * "input": {"type": "cdc-rate", "max-seq": 2000, "rows-per-batch": 400,
     *           "num-keys": 101, "partitions": 2}
+    * "input": {"type": "mysql-stream", "host": "db1", "server-id": 1001,
+    *           "names.shop.orders": "id,amt", "pks.shop.orders": "id"}
     * "input": {"type": "file-changelog", "path": "/logs/orders",
     *           "max-files-per-trigger": 1}
     * }}}
+    *
+    * A stream source gets every key but `type` as an option, named by
+    * one rule: the config key is the kebab-case of the source's option
+    * name (`rows-per-batch` → `rowsPerBatch`, `server-id` → `serverId`).
+    * The schema-store keys `names.<db>.<table>` / `pks.<db>.<table>`
+    * pass verbatim, because table names may contain `-`. Absent keys
+    * take the source's own defaults.
     *
     * file-changelog takes an explicit `"schema"` in StructType DDL form
     * ("seq BIGINT, op STRING, ...") — the normal boot order is pipeline
@@ -123,18 +134,24 @@ object PipelineConfig {
       json: String): org.apache.spark.sql.DataFrame =
     parseSourceNode(spark, mapper.readTree(json))
 
+  /** Input type → provider class of the stream sources. */
+  private val streamSources = Map(
+    "cdc-rate" -> "graft.sources.CdcRateSource",
+    "mysql-stream" -> "graft.sources.BinlogStreamSource",
+    "kafka-stream" -> "graft.sources.KafkaStreamSource",
+    "mongo-stream" -> "graft.sources.OplogStreamSource")
+
+  /** Config key → source option name (see [[parseSource]]). */
+  private def optionName(key: String): String =
+    if (key.startsWith("names.") || key.startsWith("pks.")) key
+    else {
+      val words = key.split('-')
+      words.head + words.tail.map(_.capitalize).mkString
+    }
+
   private def parseSourceNode(spark: org.apache.spark.sql.SparkSession,
       o: JsonNode): org.apache.spark.sql.DataFrame =
     req(o, "type").asText() match {
-      case "cdc-rate" =>
-        // only forward options present in the document — the source owns
-        // its defaults (CdcRateTable), a second copy here would drift
-        val keys = Seq("max-seq" -> "maxSeq", "rows-per-batch" -> "rowsPerBatch",
-          "num-keys" -> "numKeys", "partitions" -> "partitions")
-        keys.foldLeft(spark.readStream.format("graft.sources.CdcRateSource")) {
-          case (r, (k, opt)) =>
-            Option(o.get(k)).map(v => r.option(opt, v.asText())).getOrElse(r)
-        }.load()
       case "file-changelog" =>
         val path = req(o, "path").asText()
         val schema = Option(o.get("schema"))
@@ -158,63 +175,14 @@ object PipelineConfig {
           }
         graft.sources.FileChangeLogSource.readStream(spark, path, schema,
           Option(o.get("max-files-per-trigger")).map(_.asInt()))
-      case "mysql-stream" =>
-        // the WIRE tailer in the MicroBatchStream seat (the reference's
-        // [input] mysql-stream block) — host/user/etc forwarded verbatim,
-        // plus any names.<db>.<table> / pks.<db>.<table> schema-store keys
-        forwardOptions(spark.readStream.format("graft.sources.BinlogStreamSource"), o,
-          Seq("host" -> "host", "port" -> "port", "user" -> "user",
-            "password" -> "password", "file" -> "file", "pos" -> "pos",
-            "gtid" -> "gtid", "server-id" -> "serverId",
-            "tls-truststore" -> "tlsTruststore", "tls-password" -> "tlsPassword",
-            "rows-per-batch" -> "rowsPerBatch",
-            "max-buffered" -> "maxBuffered", "partitions" -> "partitions",
-            "drain-wait-ms" -> "drainWaitMs"))
-      case "kafka-stream" =>
-        // the wire consumer seat (tidbkafka input transport); payload
-        // stays raw — pair with an expr filter / KafkaCdc decode
-        forwardOptions(spark.readStream.format("graft.sources.KafkaStreamSource"), o,
-          Seq("host" -> "host", "port" -> "port", "topic" -> "topic",
-            "partition" -> "partition", "offset" -> "offset",
-            "fetch-version" -> "fetchVersion",
-            "sasl-user" -> "saslUser", "sasl-password" -> "saslPassword",
-            "sasl-mechanism" -> "saslMechanism",
-            "tls-truststore" -> "tlsTruststore", "tls-password" -> "tlsPassword",
-            "stop-at-high-water" -> "stopAtHighWater",
-            "rows-per-batch" -> "rowsPerBatch", "max-buffered" -> "maxBuffered",
-            "partitions" -> "partitions", "drain-wait-ms" -> "drainWaitMs",
-            "poll-wait-ms" -> "pollWaitMs"))
-      case "mongo-stream" =>
-        forwardOptions(spark.readStream.format("graft.sources.OplogStreamSource"), o,
-          Seq("host" -> "host", "port" -> "port",
-            "user" -> "user", "password" -> "password",
-            "auth-mechanism" -> "authMechanism", "auth-source" -> "authSource",
-            "tls-truststore" -> "tlsTruststore", "tls-password" -> "tlsPassword",
-            "compressors" -> "compressors",
-            "after-sec" -> "afterSec", "after-inc" -> "afterInc",
-            "rows-per-batch" -> "rowsPerBatch", "max-buffered" -> "maxBuffered",
-            "partitions" -> "partitions", "drain-wait-ms" -> "drainWaitMs"))
-      case other => throw new IllegalArgumentException(s"unknown input type '$other'")
+      case t =>
+        val provider = streamSources.getOrElse(t,
+          throw new IllegalArgumentException(s"unknown input type '$t'"))
+        o.fields().asScala.filter(_.getKey != "type")
+          .foldLeft(spark.readStream.format(provider)) { (r, e) =>
+            r.option(optionName(e.getKey), e.getValue.asText())
+          }.load()
     }
-
-  /** Forward only options present in the document (the source owns its
-    * defaults) plus every dotted schema-store key (`names.db.table`,
-    * `pks.db.table`) verbatim.
-    */
-  private def forwardOptions(
-      reader: org.apache.spark.sql.streaming.DataStreamReader,
-      o: JsonNode, keys: Seq[(String, String)])
-      : org.apache.spark.sql.DataFrame = {
-    val base = keys.foldLeft(reader) { case (r, (k, opt)) =>
-      Option(o.get(k)).map(v => r.option(opt, v.asText())).getOrElse(r)
-    }
-    val withStore = o.fields().asScala.foldLeft(base) { (r, e) =>
-      if (e.getKey.startsWith("names.") || e.getKey.startsWith("pks."))
-        r.option(e.getKey, e.getValue.asText())
-      else r
-    }
-    withStore.load()
-  }
 
   /** The whole deployment from ONE document — input + filters + routes +
     * output(s) + checkpoint, started as a streaming query (the reference
@@ -358,7 +326,6 @@ object PipelineConfig {
         new graft.sinks.KafkaFileBatchSink(
           req(o, "path").asText(),
           Option(o.get("partitions")).map(_.asInt()).getOrElse(4),
-          Option(o.get("topic")).map(_.asText()),
           pk,
           payloadColumns = columns)
       case "kafka-wire" =>

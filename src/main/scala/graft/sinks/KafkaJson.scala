@@ -78,8 +78,12 @@ object KafkaJson {
     * transport that must prove per-key ordering) orders on it.
     */
   def toKafkaFrame(df: DataFrame, value: Column, pkCols: Seq[String],
-      topic: Column): DataFrame = {
-    val base = Seq(partitionKey(pkCols).as("key"), value.as("value"), topic.as("topic"))
+      topic: Column): DataFrame =
+    keyed(df, value, pkCols, Seq(topic.as("topic")))
+
+  private def keyed(df: DataFrame, value: Column, pkCols: Seq[String],
+      extra: Seq[Column]): DataFrame = {
+    val base = Seq(partitionKey(pkCols).as("key"), value.as("value")) ++ extra
     val cols = if (df.columns.contains("seq")) base :+ col("seq") else base
     df.select(cols: _*)
   }
@@ -111,13 +115,12 @@ object KafkaJson {
     * Kafka transport ships. Value: the 2.0.alpha envelope when the batch
     * carries database/table/op, else the generic typed JSON of the
     * payload (`payloadColumns`, default every non-bookkeeping column).
-    * Key: the pk dependency hash. Topic priority: configured literal >
-    * routed `tgt_topic` (the column Router.kafka exists to produce) >
-    * `database.table` > fixed fallback.
+    * Key: the pk dependency hash. The frame carries no topic: the file
+    * log has no topic level and kafka-wire produces to its configured
+    * topic.
     */
   private[sinks] def records(compacted: DataFrame, numPartitions: Int,
-      topic: Option[String], pkCols: Seq[String],
-      payloadColumns: Option[Seq[String]]): DataFrame = {
+      pkCols: Seq[String], payloadColumns: Option[Seq[String]]): DataFrame = {
     val cols = compacted.columns.toSet
     val payloadCols = payloadColumns.getOrElse(
       compacted.columns.filterNot(bookkeeping).toSeq)
@@ -125,11 +128,7 @@ object KafkaJson {
     val value =
       if (hasEnvelope) valueV20(payloadCols, pkCols)
       else to_json(struct(payloadCols.map(col): _*))
-    val topicCol = topic.map(lit).getOrElse(
-      if (cols("tgt_topic")) col("tgt_topic")
-      else if (hasEnvelope) concat_ws(".", col("database"), col("table"))
-      else lit("graft"))
-    partitioned(toKafkaFrame(compacted, value, pkCols, topicCol), numPartitions)
+    partitioned(keyed(compacted, value, pkCols, Nil), numPartitions)
   }
 }
 
@@ -139,14 +138,14 @@ object KafkaJson {
   * deployment — the frame is identical.
   */
 final class KafkaFileBatchSink(dir: String, numPartitions: Int,
-    topic: Option[String], pkCols: Seq[String],
+    pkCols: Seq[String],
     payloadColumns: Option[Seq[String]] = None)
     extends graft.streaming.BatchSink {
 
   private val inner = new FileKafkaSink(dir, numPartitions)
 
   def write(batchId: Long, compacted: DataFrame): Unit =
-    inner.append(batchId, KafkaJson.records(compacted, numPartitions, topic,
+    inner.append(batchId, KafkaJson.records(compacted, numPartitions,
       pkCols, payloadColumns))
 
   def partitionLog(p: Long): Seq[String] = inner.partitionLog(p)

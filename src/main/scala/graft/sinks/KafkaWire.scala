@@ -772,7 +772,7 @@ final class KafkaWireBatchSink(host: String, port: Int, numPartitions: Int,
     extends graft.streaming.BatchSink {
 
   def write(batchId: Long, compacted: org.apache.spark.sql.DataFrame): Unit = {
-    val records = KafkaJson.records(compacted, numPartitions, Some(topic),
+    val records = KafkaJson.records(compacted, numPartitions,
       pkCols, payloadColumns)
     // closure captures primitives only (the sink itself need not ship)
     val (h, p, t, chunk, magic, auth, tlsStore) =

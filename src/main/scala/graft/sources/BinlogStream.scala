@@ -1,9 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
@@ -31,13 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Usage: `spark.readStream.format("graft.sources.BinlogStreamSource")
   * .option("host", …).load()`.
   */
-class BinlogStreamSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    BinlogStreamSource.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new BinlogStreamTable(new CaseInsensitiveStringMap(properties))
-}
+class BinlogStreamSource extends MicroBatchSource("graft-binlog-stream",
+  BinlogStreamSource.schema, new BinlogMicroBatchStream(_))
 
 object BinlogStreamSource {
   /** The enveloped change frame — same shape as
@@ -62,22 +53,6 @@ object BinlogStreamSource {
   }
 }
 
-final class BinlogStreamTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  override def name(): String = "graft-binlog-stream"
-  override def schema(): StructType = BinlogStreamSource.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = BinlogStreamSource.schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new BinlogMicroBatchStream(options)
-      }
-    }
-}
-
 final class BinlogMicroBatchStream(options: CaseInsensitiveStringMap)
     extends BufferedTailerStream[BinlogWire.Envelope](
       // offsets are COMPOSED (file index << 32 | logPos): logPos alone
@@ -93,10 +68,7 @@ final class BinlogMicroBatchStream(options: CaseInsensitiveStringMap)
           BinlogWire.fileIndexOf(
             Option(options.get("file")).getOrElse("binlog.000001")),
           options.getLong("pos", 4L)),
-      rowsPerBatch = options.getInt("rowsPerBatch", 10000),
-      maxBuffered = options.getInt("maxBuffered", 100000),
-      numPartitions = options.getInt("partitions", 2),
-      drainWaitMs = options.getLong("drainWaitMs", 30000L),
+      options = options,
       threadName = "graft-binlog-tailer") {
 
   private val host = {
@@ -118,9 +90,7 @@ final class BinlogMicroBatchStream(options: CaseInsensitiveStringMap)
 
   private val client = new BinlogWire.BinlogClient(host, port, user, password, serverId,
     // ssl-mode=REQUIRED: SSLRequest + channel upgrade before credentials
-    tls = Option(options.get("tlsTruststore")).filter(_.nonEmpty).map(p =>
-      Tls.clientContext(p,
-        Option(options.get("tlsPassword")).getOrElse("").toCharArray)))
+    tls = Tls.fromOptions(options))
 
   override protected def seqOf(e: BinlogWire.Envelope): Long = e.seq
 

@@ -1,9 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -27,13 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Usage: `spark.readStream.format("graft.sources.CdcRateSource").load()`.
   */
-class CdcRateSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    CdcRateSource.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new CdcRateTable(new CaseInsensitiveStringMap(properties))
-}
+class CdcRateSource extends MicroBatchSource("graft-cdc-rate",
+  CdcRateSource.schema, new CdcRateStream(_))
 
 object CdcRateSource {
   val schema: StructType = StructType(Seq(
@@ -61,32 +54,13 @@ object CdcRateSource {
   }
 }
 
-final case class CdcOffset(seq: Long) extends Offset {
-  override def json(): String = s"""{"seq":$seq}"""
-}
+final class CdcRateStream(options: CaseInsensitiveStringMap)
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
 
-final class CdcRateTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  override def name(): String = "graft-cdc-rate"
-  override def schema(): StructType = CdcRateSource.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = CdcRateSource.schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new CdcRateStream(
-            maxSeq = options.getLong("maxSeq", 1000L),
-            rowsPerBatch = options.getLong("rowsPerBatch", 100L),
-            numKeys = options.getLong("numKeys", 10L),
-            numPartitions = options.getInt("partitions", 2))
-      }
-    }
-}
-
-final class CdcRateStream(maxSeq: Long, rowsPerBatch: Long, numKeys: Long,
-    numPartitions: Int) extends MicroBatchStream with SupportsTriggerAvailableNow {
+  private val maxSeq = options.getLong("maxSeq", 1000L)
+  private val rowsPerBatch = options.getLong("rowsPerBatch", 100L)
+  private val numKeys = options.getLong("numKeys", 10L)
+  private val numPartitions = options.getInt("partitions", 2)
 
   // the "tailer position": what the source could serve right now. With
   // AvailableNow the whole bounded range is the target (backfill shape);
@@ -108,21 +82,13 @@ final class CdcRateStream(maxSeq: Long, rowsPerBatch: Long, numKeys: Long,
   // rowsPerBatch rate limit holds under AvailableNow too — the wrapper
   // keeps triggering micro-batches until the prepared end, so a drain is
   // N bounded batches, never one unbounded catch-up batch
-  override def latestOffset(start: Offset,
-      limit: org.apache.spark.sql.connector.read.streaming.ReadLimit): Offset = {
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[CdcOffset].seq
     available = math.min(s + rowsPerBatch, maxSeq)
     CdcOffset(available)
   }
-  override def getDefaultReadLimit: org.apache.spark.sql.connector.read.streaming.ReadLimit =
-    org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()
-  override def deserializeOffset(json: String): Offset = {
-    // a CDC source must fail LOUDLY on an unreadable position — silently
-    // restarting from 0 would replay the entire stream as duplicates
-    val m = """"seq"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-    CdcOffset(m.map(_.group(1).toLong).getOrElse(
-      throw new IllegalArgumentException(s"unreadable CDC offset: '$json'")))
-  }
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
+  override def deserializeOffset(json: String): Offset = CdcOffset.parse(json)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 

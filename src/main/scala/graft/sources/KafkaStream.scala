@@ -1,9 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -28,13 +24,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * AvailableNow shape), `rowsPerBatch`, `maxBuffered`, `partitions`
   * (Spark-side slice parallelism), `drainWaitMs`, `pollWaitMs`.
   */
-class KafkaStreamSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    KafkaStreamSource.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new KafkaStreamTable(new CaseInsensitiveStringMap(properties))
-}
+class KafkaStreamSource extends MicroBatchSource("graft-kafka-stream",
+  KafkaStreamSource.schema, new KafkaMicroBatchStream(_))
 
 object KafkaStreamSource {
   val schema: StructType = StructType(Seq(
@@ -42,22 +33,6 @@ object KafkaStreamSource {
     StructField("partition", IntegerType, nullable = false),
     StructField("key", StringType, nullable = true),
     StructField("value", StringType, nullable = true)))
-}
-
-final class KafkaStreamTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  override def name(): String = "graft-kafka-stream"
-  override def schema(): StructType = KafkaStreamSource.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = KafkaStreamSource.schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new KafkaMicroBatchStream(options)
-      }
-    }
 }
 
 final case class KafkaRecord(offset: Long, partition: Int,
@@ -68,10 +43,7 @@ final class KafkaMicroBatchStream(options: CaseInsensitiveStringMap)
       // seq = offset and offset 0 is a real record: start one BELOW the
       // first offset to read so the (start, end] window includes it
       startSeq = options.getLong("offset", 0L) - 1L,
-      rowsPerBatch = options.getInt("rowsPerBatch", 10000),
-      maxBuffered = options.getInt("maxBuffered", 100000),
-      numPartitions = options.getInt("partitions", 2),
-      drainWaitMs = options.getLong("drainWaitMs", 30000L),
+      options = options,
       threadName = "graft-kafka-tailer") {
 
   private val host = {
@@ -97,9 +69,7 @@ final class KafkaMicroBatchStream(options: CaseInsensitiveStringMap)
       (u, Option(options.get("saslPassword")).getOrElse(""),
         Option(options.get("saslMechanism")).getOrElse("SCRAM-SHA-256"))),
     // an SSL/SASL_SSL listener: the truststore must hold the broker cert
-    tls = Option(options.get("tlsTruststore")).filter(_.nonEmpty).map(p =>
-      Tls.clientContext(p,
-        Option(options.get("tlsPassword")).getOrElse("").toCharArray)))
+    tls = Tls.fromOptions(options))
 
   override protected def seqOf(e: KafkaRecord): Long = e.offset
 

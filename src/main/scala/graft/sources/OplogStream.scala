@@ -1,9 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -29,13 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Usage: `spark.readStream.format("graft.sources.OplogStreamSource")
   * .option("host", …).load()`.
   */
-class OplogStreamSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    OplogStreamSource.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new OplogStreamTable(new CaseInsensitiveStringMap(properties))
-}
+class OplogStreamSource extends MicroBatchSource("graft-oplog-stream",
+  OplogStreamSource.schema, new OplogMicroBatchStream(_))
 
 object OplogStreamSource {
   /** Enveloped oplog change: `table` carries the collection name so the
@@ -52,30 +43,11 @@ object OplogStreamSource {
     StructField("unset", ArrayType(StringType), nullable = false)))
 }
 
-final class OplogStreamTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  override def name(): String = "graft-oplog-stream"
-  override def schema(): StructType = OplogStreamSource.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = OplogStreamSource.schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new OplogMicroBatchStream(options)
-      }
-    }
-}
-
 final class OplogMicroBatchStream(options: CaseInsensitiveStringMap)
     extends BufferedTailerStream[MongoWire.OplogChange](
       startSeq = (options.getLong("afterSec", 0L) << 32) |
         (options.getLong("afterInc", 0L) & 0xffffffffL),
-      rowsPerBatch = options.getInt("rowsPerBatch", 10000),
-      maxBuffered = options.getInt("maxBuffered", 100000),
-      numPartitions = options.getInt("partitions", 2),
-      drainWaitMs = options.getLong("drainWaitMs", 30000L),
+      options = options,
       threadName = "graft-oplog-tailer") {
 
   private val host = {
@@ -89,9 +61,7 @@ final class OplogMicroBatchStream(options: CaseInsensitiveStringMap)
 
   private val client = new MongoWire.MongoClient(host, port,
     // tlsMode=requireTLS deployments: truststore holds the mongod cert
-    tls = Option(options.get("tlsTruststore")).filter(_.nonEmpty).map(p =>
-      Tls.clientContext(p,
-        Option(options.get("tlsPassword")).getOrElse("").toCharArray)),
+    tls = Tls.fromOptions(options),
     // networkMessageCompressors: offered in the hello, first server-
     // accepted one compresses the cursor traffic both ways
     compressors = Option(options.get("compressors")).toSeq

@@ -1,11 +1,61 @@
 package graft.sources
 
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+/** The one DataSourceV2 seat of the CDC stream sources: a provider is a
+  * table name, its envelope schema and how to open the stream from the
+  * read options. Spark instantiates providers by class name, so each
+  * source is a no-argument subclass (`class CdcRateSource extends
+  * MicroBatchSource(…)`) and `format("graft.sources.CdcRateSource")`
+  * keeps working.
+  */
+class MicroBatchSource(tableName: String, schema: StructType,
+    open: CaseInsensitiveStringMap => MicroBatchStream) extends TableProvider {
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = schema
+  override def getTable(s: StructType, partitioning: Array[Transform],
+      properties: java.util.Map[String, String]): Table = {
+    val options = new CaseInsensitiveStringMap(properties)
+    new Table with SupportsRead {
+      override def name(): String = tableName
+      override def schema(): StructType = MicroBatchSource.this.schema
+      override def capabilities(): java.util.Set[TableCapability] =
+        java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
+      override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
+        () => new Scan {
+          override def readSchema(): StructType = MicroBatchSource.this.schema
+          override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+            open(options)
+        }
+    }
+  }
+}
+
+/** A CDC stream position: the source's own monotone sequence. */
+final case class CdcOffset(seq: Long) extends Offset {
+  override def json(): String = s"""{"seq":$seq}"""
+}
+
+object CdcOffset {
+  private val SeqField = """"seq"\s*:\s*(-?\d+)""".r
+
+  /** Fail LOUDLY on an unreadable position — silently restarting from
+    * the configured start would replay history as duplicates. The seq
+    * may be negative (a Kafka stream starting at offset 0 sits at -1).
+    */
+  def parse(json: String): CdcOffset =
+    CdcOffset(SeqField.findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(
+      throw new IllegalArgumentException(s"unreadable CDC offset: '$json'")))
+}
 
 /** The shared tailer→micro-batch machinery behind the wire-backed CDC
-  * sources ([[BinlogMicroBatchStream]], [[OplogMicroBatchStream]]) —
+  * sources ([[BinlogMicroBatchStream]], [[KafkaMicroBatchStream]],
+  * [[OplogMicroBatchStream]]) —
   * the reference's position + sliding-window pattern (pkg/position_cache,
   * pkg/sliding_window) expressed once against the DataSourceV2
   * `MicroBatchStream` contract:
@@ -26,14 +76,23 @@ import org.apache.spark.sql.catalyst.InternalRow
   *  - a tailer failure surfaces on the NEXT offset call as a query
   *    error — never a silent empty stream.
   *
+  * Settings shared by every tailer, read from the source options:
+  * `rowsPerBatch` (admission control, default 10000), `maxBuffered`
+  * (backpressure bound, 100000), `partitions` (Spark-side slices, 2),
+  * `drainWaitMs` (AvailableNow / re-tail wait, 30000).
+  *
   * Subclasses provide the envelope type, its position, its InternalRow
   * rendering, and the tail loop itself; they MUST call [[startTailer]]
   * at the end of their constructor (the thread touches subclass fields).
   */
 abstract class BufferedTailerStream[E <: AnyRef](
-    startSeq: Long, rowsPerBatch: Int, maxBuffered: Int, numPartitions: Int,
-    drainWaitMs: Long, threadName: String)
+    startSeq: Long, options: CaseInsensitiveStringMap, threadName: String)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
+
+  private val rowsPerBatch = options.getInt("rowsPerBatch", 10000)
+  private val maxBuffered = options.getInt("maxBuffered", 100000)
+  private val numPartitions = options.getInt("partitions", 2)
+  private val drainWaitMs = options.getLong("drainWaitMs", 30000L)
 
   /** The monotone stream position of one envelope row. */
   protected def seqOf(e: E): Long
@@ -109,10 +168,6 @@ abstract class BufferedTailerStream[E <: AnyRef](
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException("admission-control form only")
 
-  /** Admission control: at most rowsPerBatch buffered rows past `start`
-    * (rows sharing the end position ride along — positions, not row
-    * counts, are the offset unit).
-    */
   /** Drop buffered rows ≤ `upTo` (committed history / replayed resume
     * prefix) and wake a backpressured tailer. Caller holds `lock`.
     */
@@ -124,6 +179,10 @@ abstract class BufferedTailerStream[E <: AnyRef](
     if (freed) lock.notifyAll()
   }
 
+  /** Admission control: at most rowsPerBatch buffered rows past `start`
+    * (rows sharing the end position ride along — positions, not row
+    * counts, are the offset unit).
+    */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     raise()
     val s = start.asInstanceOf[CdcOffset].seq
@@ -146,13 +205,7 @@ abstract class BufferedTailerStream[E <: AnyRef](
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
-  override def deserializeOffset(json: String): Offset = {
-    // fail LOUDLY on an unreadable position — silently restarting from
-    // the configured start would replay history as duplicates
-    val m = """"seq"\s*:\s*(-?\d+)""".r.findFirstMatchIn(json)
-    CdcOffset(m.map(_.group(1).toLong).getOrElse(
-      throw new IllegalArgumentException(s"unreadable CDC offset: '$json'")))
-  }
+  override def deserializeOffset(json: String): Offset = CdcOffset.parse(json)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     raise()
@@ -197,14 +250,8 @@ abstract class BufferedTailerStream[E <: AnyRef](
   }
 
   /** The ack of the reference's sliding window: prune ≤ end. */
-  override def commit(end: Offset): Unit = {
-    val e = end.asInstanceOf[CdcOffset].seq
-    lock.synchronized {
-      while (!buffer.isEmpty && seqOf(buffer.peekFirst()) <= e)
-        buffer.removeFirst()
-      lock.notifyAll() // unblock a backpressured tailer
-    }
-  }
+  override def commit(end: Offset): Unit =
+    lock.synchronized(pruneUpTo(end.asInstanceOf[CdcOffset].seq))
 
   override def stop(): Unit = {
     lock.synchronized { tailerDone = true; lock.notifyAll() }

@@ -3,6 +3,7 @@ package graft.sources
 import java.net.Socket
 import java.security.KeyStore
 import javax.net.ssl.{KeyManagerFactory, SSLContext, SSLServerSocket, SSLSocket, TrustManagerFactory}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** TLS plumbing shared by the wire transports (Kafka, Mongo, MySQL
   * binlog, ES REST). Production listeners for all four protocols are
@@ -61,6 +62,13 @@ object Tls {
     ctx.init(null, tmf.getTrustManagers, null)
     ctx
   }
+
+  /** The client context a source's `tlsTruststore` / `tlsPassword`
+    * options name; None when no truststore is set (plain transport).
+    */
+  def fromOptions(options: CaseInsensitiveStringMap): Option[SSLContext] =
+    Option(options.get("tlsTruststore")).filter(_.nonEmpty).map(p =>
+      clientContext(p, Option(options.get("tlsPassword")).getOrElse("").toCharArray))
 
   /** Fresh client connection with SNI + HTTPS endpoint identification
     * (hostname must match the certificate's SAN — `localhost` or an IP

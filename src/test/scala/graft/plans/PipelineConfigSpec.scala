@@ -80,6 +80,43 @@ class PipelineConfigSpec extends SparkSpec {
     assert(e.getMessage.contains("schema"))
   }
 
+  test("every stream input type delivers its documented keys as camelCase source options") {
+    // config key -> the option name the source reads; load() builds the
+    // relation without opening a connection, so no stub server is needed
+    val shared = Seq("rows-per-batch" -> "rowsPerBatch", "max-buffered" -> "maxBuffered",
+      "partitions" -> "partitions", "drain-wait-ms" -> "drainWaitMs",
+      "tls-truststore" -> "tlsTruststore", "tls-password" -> "tlsPassword")
+    val store = Seq("names.shop.order-items" -> "names.shop.order-items",
+      "pks.shop.order-items" -> "pks.shop.order-items")
+    val documented = Map(
+      "cdc-rate" -> Seq("max-seq" -> "maxSeq", "rows-per-batch" -> "rowsPerBatch",
+        "num-keys" -> "numKeys", "partitions" -> "partitions"),
+      "mysql-stream" -> (Seq("host" -> "host", "port" -> "port", "user" -> "user",
+        "password" -> "password", "file" -> "file", "pos" -> "pos", "gtid" -> "gtid",
+        "server-id" -> "serverId") ++ shared ++ store),
+      "kafka-stream" -> (Seq("host" -> "host", "port" -> "port", "topic" -> "topic",
+        "partition" -> "partition", "offset" -> "offset",
+        "fetch-version" -> "fetchVersion", "sasl-user" -> "saslUser",
+        "sasl-password" -> "saslPassword", "sasl-mechanism" -> "saslMechanism",
+        "stop-at-high-water" -> "stopAtHighWater",
+        "poll-wait-ms" -> "pollWaitMs") ++ shared),
+      "mongo-stream" -> (Seq("host" -> "host", "port" -> "port", "user" -> "user",
+        "password" -> "password", "auth-mechanism" -> "authMechanism",
+        "auth-source" -> "authSource", "compressors" -> "compressors",
+        "after-sec" -> "afterSec", "after-inc" -> "afterInc") ++ shared))
+    documented.foreach { case (tpe, keys) =>
+      val doc = (("type" -> tpe) +: keys.map { case (k, _) => k -> s"v-$k" })
+        .map { case (k, v) => s""""$k": "$v"""" }.mkString("{", ", ", "}")
+      val options = PipelineConfig.parseSource(spark, doc).queryExecution.analyzed
+        .collectFirst {
+          case r: org.apache.spark.sql.catalyst.streaming.StreamingRelationV2 =>
+            scala.jdk.CollectionConverters.MapHasAsScala(
+              r.extraOptions.asCaseSensitiveMap()).asScala.toMap
+        }.getOrElse(fail(s"$tpe: no StreamingRelationV2 in the plan"))
+      assert(options == keys.map { case (k, opt) => opt -> s"v-$k" }.toMap, tpe)
+    }
+  }
+
   test("one config document launches the whole pipeline: input -> filters -> routes -> sinks") {
     val work = java.nio.file.Files.createTempDirectory("cfg-launch").toString
     val q = PipelineConfig.launch(spark,
@@ -137,7 +174,7 @@ class PipelineConfigSpec extends SparkSpec {
   test("output config builds a kafka-file sink: v2.0 frame, per-key partition order") {
     val dir = java.nio.file.Files.createTempDirectory("cfg-kafka").toString
     val sink = PipelineConfig.parseSink(spark,
-      s"""{"type":"kafka-file","path":"$dir","partitions":2,"topic":"t-orders"}""",
+      s"""{"type":"kafka-file","path":"$dir","partitions":2}""",
       Seq("id")).asInstanceOf[graft.sinks.KafkaFileBatchSink]
     val env = Seq(
       (1L, "insert", "db0", "orders", 1L, "a"),
@@ -180,11 +217,11 @@ class PipelineConfigSpec extends SparkSpec {
       assert(scala.jdk.CollectionConverters.SetHasAsScala(broker.clientIds)
         .asScala.forall(_.startsWith("graft-exec-")))
       // both transports ship one record frame: the same batch through a
-      // kafka-file sink with the same partitions and topic yields each
+      // kafka-file sink with the same partitions yields each
       // broker partition's value sequence as that partition's file log
       val dir = java.nio.file.Files.createTempDirectory("cfg-kafka-twin").toString
       val file = PipelineConfig.parseSink(spark,
-        s"""{"type":"kafka-file","path":"$dir","partitions":2,"topic":"t-orders"}""",
+        s"""{"type":"kafka-file","path":"$dir","partitions":2}""",
         Seq("id")).asInstanceOf[graft.sinks.KafkaFileBatchSink]
       file.write(0L, env)
       val wire = scala.jdk.CollectionConverters.MapHasAsScala(broker.log).asScala

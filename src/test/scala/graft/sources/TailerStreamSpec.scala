@@ -16,8 +16,11 @@ class TailerStreamSpec extends AnyFunSuite {
   private class FakeStream(start: Long, maxBuf: Int = 100,
       waitMs: Long = 5000)
       extends BufferedTailerStream[java.lang.Long](
-        startSeq = start, rowsPerBatch = 100, maxBuffered = maxBuf,
-        numPartitions = 1, drainWaitMs = waitMs, threadName = "fake-tailer") {
+        startSeq = start,
+        options = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+          java.util.Map.of("rowsPerBatch", "100", "maxBuffered", maxBuf.toString,
+            "partitions", "1", "drainWaitMs", waitMs.toString)),
+        threadName = "fake-tailer") {
     val feed = new java.util.concurrent.LinkedBlockingQueue[Long]()
     override protected def seqOf(e: java.lang.Long): Long = e
     override protected def toRow(e: java.lang.Long): InternalRow = InternalRow(e.longValue)
