@@ -36,6 +36,13 @@ object Engine {
       // microsecond-aligned, verified in TESTDATA)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // file:// sets each new file's and directory's mode with chmod(2)
+      // instead of a forked chmod, and the streaming checkpoint writes
+      // through that FileSystem: Spark's default FileContext manager
+      // builds its own stock one (README "Local file system")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
     master.foreach(b.master)
     val withExtra = extraConf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
     val spark = withExtra.getOrCreate()

@@ -103,11 +103,16 @@ object Tls {
     ctx.getServerSocketFactory.createServerSocket(0, 16,
       java.net.InetAddress.getLoopbackAddress).asInstanceOf[SSLServerSocket]
 
-  /** Server-side STARTTLS upgrade of an accepted plain socket. */
-  def upgradeServer(ctx: SSLContext, plain: Socket): SSLSocket = {
-    val s = ctx.getSocketFactory.createSocket(plain, null, plain.getPort, true)
+  /** Server-side STARTTLS upgrade of an accepted plain socket. `consumed`
+    * holds bytes a buffered reader already took off the socket after the
+    * plaintext upgrade request (a ClientHello that arrived in the same
+    * read); the handshake reads them before the socket.
+    */
+  def upgradeServer(ctx: SSLContext, plain: Socket,
+      consumed: Array[Byte] = Array.emptyByteArray): SSLSocket = {
+    val s = ctx.getSocketFactory
+      .createSocket(plain, new java.io.ByteArrayInputStream(consumed), true)
       .asInstanceOf[SSLSocket]
-    s.setUseClientMode(false)
     s.startHandshake()
     s
   }

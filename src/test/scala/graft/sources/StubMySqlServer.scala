@@ -90,7 +90,9 @@ final class StubMySqlServer(user: String, password: String,
         tls match {
           case Some(ctx) =>
             sawSslRequest = true
-            sock = Tls.upgradeServer(ctx, sock)
+            // the ClientHello may already sit in the plaintext reader's
+            // buffer: hand those bytes to the handshake
+            sock = Tls.upgradeServer(ctx, sock, in.readNBytes(in.available()))
             in = new java.io.BufferedInputStream(sock.getInputStream)
             out = new java.io.BufferedOutputStream(sock.getOutputStream)
             resp = readPacket(in)._2
