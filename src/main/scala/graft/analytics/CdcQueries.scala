@@ -448,10 +448,11 @@ object CdcQueries {
       writeOne(src.unionByName(dstAll.filter(col("barrier") =!= 5)), "a_msgs", 1000000L)
       writeOne(sentinels, "b_barrier", 2000000L)
       writeOne(dstAll.filter(col("barrier") === 5), "c_late", 3000000L)
-      // tuned dcp state-store seat (DcpTrickleProbe measurement: RocksDB
-      // + changelog checkpointing + key-count-sized state partitions cut
-      // the per-batch commit floor 1.15 s -> 0.46 s at identical
-      // verdicts), scoped to a cloned session
+      // tuned dcp state-store seat (measured on a trickle of tiny
+      // micro-batches: RocksDB + changelog checkpointing +
+      // key-count-sized state partitions cut the per-batch commit floor
+      // 1.15 s -> 0.46 s at identical verdicts), scoped to a cloned
+      // session
       val s2 = s.newSession()
       s2.conf.set("spark.sql.shuffle.partitions", "8")
       s2.conf.set("spark.sql.streaming.stateStore.providerClass",

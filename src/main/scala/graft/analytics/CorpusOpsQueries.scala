@@ -1,7 +1,7 @@
 package graft.analytics
 
 import graft.core.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Fourth training-data battery: corpus operations a pretraining pipeline
@@ -46,16 +46,12 @@ object CorpusOpsQueries {
         expr("substr(lo, 1, CAST(lcp_len AS INT))").as("prefix"))
   }
 
-  /** Hard-negative mining with the ANCHOR SET as a parameter. The oracle
-    * entry anchors on `vec_id % 25 == 0` (anchors scale with the corpus —
-    * the harness regime); ScaleStress also runs the PRODUCTION regime, a
-    * FIXED anchor set over a growing corpus, where cost is linear in
-    * corpus size (VERDICT r06 stress caveat closed). Same code path both
-    * ways: LSH bucket equi-join, label filter inside the candidate set,
-    * per-anchor top-1 window.
+  /** Hard-negative mining anchored on `vec_id % 25 == 0` (anchors scale
+    * with the corpus; a FIXED anchor set over a growing corpus costs time
+    * linear in corpus size): LSH bucket equi-join, label filter inside
+    * the candidate set, per-anchor top-1 window.
     */
-  def hardNegatives(s: SparkSession, d: String,
-      anchorPred: Column): DataFrame = {
+  def hardNegatives(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.GraftFunctions
     val e0 = Tables.embeddings(s, d)
@@ -63,7 +59,7 @@ object CorpusOpsQueries {
     val b = e0.withColumn("buckets", GraftFunctions.lsh_buckets(col("embedding"), 8, 4))
       .select(col("vec_id"), col("label"), posexplode(col("buckets")))
       .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket")
-    val anchors = b.filter(anchorPred)
+    val anchors = b.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("anchor_id"), col("label").as("anchor_label"),
         col("tbl"), col("bucket"))
     val candIds = b.join(anchors, Seq("tbl", "bucket"))
@@ -239,7 +235,7 @@ object CorpusOpsQueries {
     // production bit-widths the LSH tables are sized so that happens
     // with vanishing probability.
     CatalogQuery("emb_hard_negative_mining",
-      (s, d) => hardNegatives(s, d, col("vec_id") % 25 === 0), Some(
+      (s, d) => hardNegatives(s, d), Some(
       s"""WITH b AS (
          |  SELECT vec_id, label, embedding, t.tbl,
          |    ${graft.functions.Similarity.lshBucketDuckOffset("embedding", 4, 64, "t.tbl * 4")} AS bucket

@@ -494,13 +494,9 @@ object IndexQueries {
           // empty-relation propagation can prune the zero-row aggregate
           // subtree — and the CollectMetrics inside it — from the final
           // plan, completing the Observation with an EMPTY metrics map;
-          // only then pay the former standalone job.
-          val qbvBox =
-            try qbObs.get("qbv").asInstanceOf[java.lang.Long]
-            catch { case _: NoSuchElementException =>
-              batch.filter(col("kind") === "qry")
-                .agg(max(col("qb"))).head.getAs[java.lang.Long](0)
-            }
+          // only then pay the standalone job.
+          val qbvBox = graft.core.Fused.observedOr[java.lang.Long](qbObs, "qbv")(
+            batch.filter(col("kind") === "qry").agg(max(col("qb"))).head.getAs[java.lang.Long](0))
           if (qbvBox != null) {
             val qbv = qbvBox.longValue
             val pc = batch.filter(col("kind") === "qry").select(col("k"))
@@ -628,9 +624,10 @@ object IndexQueries {
           // frame lives on a cloned micro-batch session, and the
           // Observation's listener registers on the observed frame's
           // session — a cur-rooted upd would post its execution event to
-          // the MAIN session's bus and qbObs.get below would hang
-          // forever. Full outer is symmetric and the select is explicit,
-          // so flipping the receiver is a row-identical rewrite.
+          // the MAIN session's bus, and the qbObs wait below would time
+          // out into the standalone job every batch. Full outer is
+          // symmetric and the select is explicit, so flipping the
+          // receiver is a row-identical rewrite.
           val upd = inc.join(cur, Seq("hrow", "cell"), "full")
             .select(col("hrow"), col("cell"),
               (expr("coalesce(n, CAST(0 AS BIGINT)) div 2") +
@@ -646,13 +643,9 @@ object IndexQueries {
           // Fallback as in the non-decay twin: a change-free batch can
           // lose the mid-plan CollectMetrics to AQE's runtime
           // empty-relation propagation (empty metrics map) — only then
-          // pay the former standalone job.
-          val qbvBox =
-            try qbObs.get("qbv").asInstanceOf[java.lang.Long]
-            catch { case _: NoSuchElementException =>
-              batch.filter(col("kind") === "qry")
-                .agg(max(col("qb"))).head.getAs[java.lang.Long](0)
-            }
+          // pay the standalone job.
+          val qbvBox = graft.core.Fused.observedOr[java.lang.Long](qbObs, "qbv")(
+            batch.filter(col("kind") === "qry").agg(max(col("qb"))).head.getAs[java.lang.Long](0))
           if (qbvBox != null) {
             val qbv = qbvBox.longValue
             val pc = batch.filter(col("kind") === "qry").select(col("k"))

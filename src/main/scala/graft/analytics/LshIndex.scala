@@ -303,12 +303,12 @@ private[analytics] object LshIndex {
     * code. The decision input is FREE: the caller maintains the live
     * count by batch arithmetic and the batch row count from its own
     * change frames; no state is read to decide. Crossover measured at
-    * 10×/sf0.1 (ProfileOne, same staged dir): delta ≈ 9.9 s/batch at a
-    * 17% batch vs scan ≈ 5 s — while the fixed 4.4% knnbatch stress
-    * batch reads ~flat under delta and would pay the full corpus pass
-    * under scan. The threshold sits between those regimes; both paths
-    * produce the identical from-scratch assignment (LshIndexSpec pins
-    * rows, counts, and mates equal through forced switches both ways).
+    * 10×/sf0.1 (same staged dir): delta ≈ 9.9 s/batch at a 17% batch
+    * vs scan ≈ 5 s — while a fixed 4.4% batch reads ~flat under delta
+    * and would pay the full corpus pass under scan. The threshold sits
+    * between those regimes; both paths produce the identical
+    * from-scratch assignment (LshIndexSpec pins rows, counts, and mates
+    * equal through forced switches both ways).
     */
   val ScanRegimeBatchFraction: Double = 0.08
 

@@ -373,8 +373,7 @@ object MiningQueries {
     * scope.
     */
   private[graft] final class ForestCutCC(
-      s: org.apache.spark.sql.SparkSession, work: String,
-      cutEnabled: Boolean = true) {
+      s: org.apache.spark.sql.SparkSession, work: String) {
     import s.implicits._
     // Prefix bucketing makes every maintenance read a POINT read:
     // edges/forest bucket on u (probe "edges of this vertex set"),
@@ -507,14 +506,10 @@ object MiningQueries {
         () => graft.core.Prof.time("fc/probe") {
           val fNow = forest.readBucketIds(delBuckets)
             .select(col("u"), col("v"))
-          // cutEnabled=false treats EVERY delete as a certificate hit — the
-          // rebuild-every-batch twin on identical inputs (the ScaleStress
-          // forestcut block measures the pair)
           // emptiness check fused into the checkpoint job (the former
           // isEmpty was a second job per deletion batch)
           val (td, n) = graft.core.Fused.checkpointCount(
-            if (cutEnabled) dels.join(fNow, Seq("u", "v"), "left_semi") else dels,
-            count(lit(1)))
+            dels.join(fNow, Seq("u", "v"), "left_semi"), count(lit(1)))
           treeDel = td; nTreeDel = n
         },
         () => graft.core.Prof.time("fc/edgemerge") {
@@ -1214,12 +1209,11 @@ object MiningQueries {
     // ---- the forest cut's MARGINAL-delete regime, benched ------------------
     // gph_cdc_forest_cut_components' cost is dominated by certificate
     // construction (init + insert); the cut's PRODUCTION claim — a
-    // non-tree deletion batch is nearly free — lived only in the
-    // ScaleStress forestcut pair. This bounded entry is that claim as a
-    // bench headliner: one init, two non-tree deletion batches (must
-    // SKIP — in-entry require), one tree batch (must fire the scoped
-    // rebuild), so a regression in the certificate probe or the skip
-    // path moves a BENCH_rN line instead of hiding in stress extras.
+    // non-tree deletion batch is nearly free — needs its own line. This
+    // bounded entry is that claim as a bench headliner: one init, two
+    // non-tree deletion batches (must SKIP — in-entry require), one tree
+    // batch (must fire the scoped rebuild), so a regression in the
+    // certificate probe or the skip path moves a BENCH_rN line.
     // The whole candidate set deletes, so the oracle recomputes final
     // components from scratch (recursive min-label over the surviving
     // graph; isolated vertices self-labeled) — post-cut correctness
@@ -1235,9 +1229,8 @@ object MiningQueries {
       // clique the same way (85% of candidates landed ON the forest);
       // an order-parity half fragments connectivity and the rebuild
       // explodes (264 s). So the line keeps the full t=43 graph: ~80%
-      // of its cost is the ONE unavoidable certificate build, the
-      // marginal batches ride on top, and the ScaleStress forestcut
-      // pair stays the isolated marginal-vs-rebuild evidence.
+      // of its cost is the ONE unavoidable certificate build and the
+      // marginal batches ride on top.
       val li = Tables.lineitem(s, d).filter(col("l_quantity") >= 43)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       val e43 = li.as("a").join(li.as("b"),

@@ -41,17 +41,10 @@ object PipelineE2E {
   private val NumKeys = 101L
   private val RowsPerBatch = 400L
 
-  /** The gated configuration: kill-and-restart at the small deterministic
-    * size the oracle replays.
+  /** Run the deployment with its kill and restart at the small
+    * deterministic size the oracle replays; returns the Derby state.
     */
-  def run(s: SparkSession): DataFrame =
-    runPipeline(s, MaxSeq, NumKeys, RowsPerBatch, injectKill = true)
-
-  /** The same deployment at any scale (ScaleStress throughput runs size
-    * it up without the fault injection).
-    */
-  def runPipeline(s: SparkSession, maxSeq: Long, numKeys: Long,
-      rowsPerBatch: Long, injectKill: Boolean): DataFrame = {
+  def run(s: SparkSession): DataFrame = {
     val runId = java.util.UUID.randomUUID().toString.replace("-", "")
     val url = s"jdbc:derby:memory:e2e$runId;create=true"
     val work = Q.scratch("e2e")
@@ -96,45 +89,36 @@ object PipelineE2E {
          |   "pk": ["tgt_table", "id"]}
          |]""".stripMargin, plan.pkCols)
     def source = s.readStream.format("graft.sources.CdcRateSource")
-      .option("maxSeq", maxSeq).option("rowsPerBatch", rowsPerBatch)
-      .option("numKeys", numKeys).option("partitions", 2).load()
+      .option("maxSeq", MaxSeq).option("rowsPerBatch", RowsPerBatch)
+      .option("numKeys", NumKeys).option("partitions", 2).load()
 
-    if (injectKill) {
-      val sink = new KillOnceSink(sinks, killAtBatch = 2)
-      // run 1: rate-limited micro-batches; dies after batch 2 hit the sinks
-      val q1 = PipelineRunner.start(plan, source, sink,
-        trigger = Trigger.ProcessingTime(0))
-      def isInjectedKill(t: Throwable): Boolean = {
-        var cur = t
-        var depth = 0
-        while (cur != null && depth < 10) {
-          if (Option(cur.getMessage).exists(_.contains("injected mid-stream kill")))
-            return true
-          cur = cur.getCause
-          depth += 1
-        }
-        false
+    val sink = new KillOnceSink(sinks, killAtBatch = 2)
+    // run 1: rate-limited micro-batches; dies after batch 2 hit the sinks
+    val q1 = PipelineRunner.start(plan, source, sink,
+      trigger = Trigger.ProcessingTime(0))
+    def isInjectedKill(t: Throwable): Boolean = {
+      var cur = t
+      var depth = 0
+      while (cur != null && depth < 10) {
+        if (Option(cur.getMessage).exists(_.contains("injected mid-stream kill")))
+          return true
+        cur = cur.getCause
+        depth += 1
       }
-      try {
-        q1.awaitTermination()
-        sys.error("e2e pipeline: run 1 terminated without the injected kill")
-      } catch {
-        case e: org.apache.spark.sql.streaming.StreamingQueryException if isInjectedKill(e) => ()
-      }
-
-      // run 2: resume from the checkpoint — replay the killed batch, then
-      // drain the remainder of the bounded stream
-      val q2 = PipelineRunner.start(plan, source, sink,
-        trigger = Trigger.AvailableNow())
-      q2.awaitTermination()
-    } else {
-      // throughput shape: AvailableNow drains the bounded stream in
-      // rate-limited micro-batches (admission control holds), no fault
-      // injection
-      val q = PipelineRunner.start(plan, source, sinks,
-        trigger = Trigger.AvailableNow())
-      q.awaitTermination()
+      false
     }
+    try {
+      q1.awaitTermination()
+      sys.error("e2e pipeline: run 1 terminated without the injected kill")
+    } catch {
+      case e: org.apache.spark.sql.streaming.StreamingQueryException if isInjectedKill(e) => ()
+    }
+
+    // run 2: resume from the checkpoint — replay the killed batch, then
+    // drain the remainder of the bounded stream
+    val q2 = PipelineRunner.start(plan, source, sink,
+      trigger = Trigger.AvailableNow())
+    q2.awaitTermination()
 
     def derbyTable(t: String): DataFrame =
       s.read.format("jdbc").option("url", url)

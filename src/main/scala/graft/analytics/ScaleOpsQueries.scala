@@ -191,19 +191,16 @@ object ScaleOpsQueries {
     * lambda interprets 16 iterations per row). The oracle keeps the HOF
     * form — `ZOrderSpec` proves the two formulations bit-identical.
     */
-  /** SemDeDup core with the cell count as a PARAMETER. The oracle entry
-    * pins `cells = 16` (the first 16 vectors seed the cells — exact
-    * across engines); ScaleStress runs the production regime C ∝ √N on
-    * the same code path, proving the within-cell pairwise stage's
-    * Σ|cell|² cost stays ~N^1.5 instead of the fixed-C N²/C
-    * (VERDICT r06 stress caveat closed). Seeds are the `cells` smallest
-    * vec_ids (TakeOrdered — deterministic, no global sort materialized).
+  /** SemDeDup core over 16 cells: the 16 smallest vec_ids seed the cells
+    * (TakeOrdered — deterministic, exact across engines, no global sort
+    * materialized). At C ∝ √N cells the within-cell pairwise stage's
+    * Σ|cell|² cost stays ~N^1.5 instead of the fixed-C N²/C.
     */
-  def semDedup(s: SparkSession, d: String, cells: Int): DataFrame = {
+  def semDedup(s: SparkSession, d: String): DataFrame = {
     val quant = Tables.embeddings(s, d).select(col("vec_id"),
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 64.0 + 0.5) AS BIGINT))")
         .as("q"))
-    val seeds = quant.orderBy(col("vec_id")).limit(cells)
+    val seeds = quant.orderBy(col("vec_id")).limit(16)
       .select(col("vec_id").as("cell"), col("q").as("cv"))
     val seedsOne = seeds.agg(collect_list(struct(col("cell"), col("cv"))).as("cs"))
     val w = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("cell"))
@@ -438,7 +435,7 @@ object ScaleOpsQueries {
     // ~√N-sized; the harness pins C = 16 seed cells for oracle exactness,
     // and the per-cell join shape (shuffle on cell, no cross-cell pairs)
     // is unchanged at any C.
-    CatalogQuery("ddp_semdedup_embeddings", (s, d) => semDedup(s, d, 16), Some(
+    CatalogQuery("ddp_semdedup_embeddings", (s, d) => semDedup(s, d), Some(
       """WITH q AS (
         |  SELECT vec_id,
         |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 64.0 + 0.5) AS BIGINT)) AS q
@@ -910,7 +907,7 @@ object ScaleOpsQueries {
     // every survivor), so the hash gate IS the proof that incremental
     // maintenance converges to the batch-built index. 100 TB: per-batch
     // cost ∝ batch size (assignment) + touched-bucket rewrite — never
-    // corpus size (ScaleStress's ann_incremental_batch row measures it).
+    // corpus size.
     CatalogQuery("ann_cdc_incremental_index", (s, d) => {
       val (idx, _) = annMaintainedIndex(s, d)
       idx.select(col("vec_id"), col("cell"),
@@ -930,7 +927,7 @@ object ScaleOpsQueries {
     // its new image — the contract a replicated eval set needs.
     CatalogQuery("ann_cdc_incremental_probe", (s, d) => {
       val (idx, seedsOne) = annMaintainedIndex(s, d)
-      annProbeMaintained(idx, seedsOne, col("vec_id") % 50 === 0)
+      annProbeMaintained(idx, seedsOne)
     }, Some(
       s"""$annFinalIndexDuck,
          |members AS (SELECT q.vec_id, q.q, a.cell FROM quant q JOIN assigned a USING (vec_id)),
@@ -1366,7 +1363,7 @@ object ScaleOpsQueries {
     // The composition the r10 verdict named top item: ann_ivf_cell_split's
     // deterministic 2-means is WIRED INTO the CDC maintenance loop
     // ([[annAutosplitIndex]]) instead of running pinned C=16 — the direct
-    // cause of the two documented quadratic 30× stress rows (cell
+    // cause of the two documented quadratic 30× scale runs (cell
     // population grew with the corpus, so every probe's candidate set
     // did too). With maintenance splitting any cell past the
     // √N-tracking cap (max(36, ⌊√N_live⌋) — annSplitCapFor),
@@ -1390,12 +1387,11 @@ object ScaleOpsQueries {
     // Probe the auto-split maintained index: same nprobe=2 / top-3 probe
     // as ann_cdc_incremental_probe, but against the EVOLVED centroid set
     // — candidate sets are cap-bounded regardless of corpus size, which
-    // is what turns the maintained-probe stress row near-linear
-    // (ScaleStress's ann_autosplit_probe row measures it next to the
-    // pinned-C twin).
+    // is what turns the maintained probe near-linear next to the
+    // pinned-C twin.
     CatalogQuery("ann_cdc_autosplit_probe", (s, d) => {
       val (idx, centsOne) = annAutosplitIndex(s, d)
-      annProbeMaintained(idx, centsOne, col("vec_id") % 50 === 0)
+      annProbeMaintained(idx, centsOne)
     }, Some(
       s"""WITH $annAutosplitDuck,
          |qs AS (SELECT vec_id AS query_id, q AS qq FROM st3 WHERE vec_id % 50 = 0),
@@ -1613,9 +1609,9 @@ object ScaleOpsQueries {
     // The entry point / query set are the LIVE vector state — a deleted
     // vector stops querying, an updated one walks from its new position.
     // When the graph entry has already built the sink this is pure
-    // serve cost (the ScaleStress pair measures both orders).
+    // serve cost.
     CatalogQuery("ann_graph_beam_serve_maintained", (s, d) =>
-      beamServeMaintained(s, d, col("vec_id") % 11 === 0), Some {
+      beamServeMaintained(s, d), Some {
       def hop(in: String, out: String, w: Int): String =
         s"""c$out AS (
            |  SELECT DISTINCT qid, v FROM (
@@ -1904,8 +1900,8 @@ object ScaleOpsQueries {
   private val knnGraphCache =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** The cached maintained-k-NN work dir for dataset `d` (stress hook —
-    * build must have run; see [[annMaintainedKnnGraph]]).
+  /** The cached maintained-k-NN work dir for dataset `d` (the build must
+    * have run; see [[annMaintainedKnnGraph]]).
     */
   private[graft] def knnWorkDir(d: String): String = knnGraphCache(d)
 
@@ -2040,9 +2036,7 @@ object ScaleOpsQueries {
     * access a bucket point read of the batch's own neighborhood keys
     * plus the O(√N) leaf-count table; returns the post-batch live count.
     * `chg` carries post-images (vec_id, embedding, q); `delIds` the
-    * tombstoned keys. Shared by the build loop and ScaleStress's
-    * `knnbatch` fixed-batch pair — the corpus-independence evidence that
-    * per-batch cost tracks the batch, not the corpus.
+    * tombstoned keys. Per-batch cost tracks the batch, not the corpus.
     *
     * One declared exception to "every access a point read": when the
     * batch is a large fraction of live state, the LSH index maintenance
@@ -2067,8 +2061,8 @@ object ScaleOpsQueries {
     // nothing and its fixed jobs (a bucket-id collect + pruned listing
     // per read) dominate — read each sink ONCE and semi-join (the scan
     // shape this loop had before the point-read retrofit). Small batches
-    // (the 100 TB steady state; the knnbatch stress row pins the regime
-    // ~flat at 3× corpus) keep the bucket-pruned point reads. The
+    // (the 100 TB steady state; a fixed batch measured ~flat at 3×
+    // corpus) keep the bucket-pruned point reads. The
     // decision input is free: the change frames are checkpointed (their
     // counts are trivial jobs) and the live count is batch arithmetic.
     // `forceScan` is the regime-equivalence spec's forcing seam ONLY
@@ -2278,8 +2272,7 @@ object ScaleOpsQueries {
         lit(graft.core.ChangeLog.Delete).as("op")))
       .withColumn("seq", lit(b)))
     // rev delta, same commit cadence as the graph merge (see
-    // [[revDeltaBatch]] — shared with the ScaleStress pair that
-    // measures it against the epoch-rebuild twin)
+    // [[revDeltaBatch]])
     graft.core.Prof.time("knncdc/revDelta") {
       revDeltaBatch(rev, vecs, fwdOld, rows, changedV, delIds, b,
         bulkLive = liveAll.map(_.select(col("vec_id"))),
@@ -2297,9 +2290,8 @@ object ScaleOpsQueries {
     * their rev row (touched neighbors already dropped them from forward
     * lists; untouched lists cannot reference them). Cost ∝ the touched
     * neighborhood — point reads of the affected keys' rev/vector
-    * buckets — never ∝ the graph; ScaleStress's `revadj` pair measures
-    * this against the flatten-the-whole-graph epoch rebuild it replaced
-    * (r13 verdict #6).
+    * buckets — never ∝ the graph, unlike the flatten-the-whole-graph
+    * epoch rebuild it replaced (r13 verdict #6).
     */
   private[graft] def revDeltaBatch(rev: graft.sinks.SnapshotSink,
       vecs: graft.sinks.SnapshotSink, fwdOld: DataFrame, rows: DataFrame,
@@ -2343,27 +2335,6 @@ object ScaleOpsQueries {
     rev.merge(revBatch)
   }
 
-  /** The epoch-rebuild twin of [[revDeltaBatch]] — flatten the WHOLE
-    * forward graph and rewrite every reverse row (plus tombstones for
-    * vertices that lost their last referrer). Stress-only: this is the
-    * O(graph)-per-epoch shape the delta rule replaced; ScaleStress's
-    * `revadj` pair runs both on identical inputs and asserts equal end
-    * states.
-    */
-  private[graft] def revEpochRebuild(rev: graft.sinks.SnapshotSink,
-      fwd: DataFrame, seqNo: Long): Unit = {
-    val full = fwd.select(col("u").as("w"), explode(col("nbrs")).as("u"))
-      .groupBy(col("u")).agg(sort_array(collect_set(col("w"))).as("rnbrs"))
-      .localCheckpoint()
-    val stale = rev.read().select(col("u"))
-      .join(full.select(col("u")), Seq("u"), "left_anti")
-      .select(col("u"), lit(null).cast("array<bigint>").as("rnbrs"),
-        lit(graft.core.ChangeLog.Delete).as("op"))
-    rev.merge(full.withColumn("op", lit(graft.core.ChangeLog.Update))
-      .unionByName(stale)
-      .withColumn("seq", lit(seqNo)))
-  }
-
   /** The reverse-adjacency serving index of the maintained k-NN graph —
     * delta-maintained in the SAME batch loop as the graph (no epoch
     * rebuild; r12 verdict #1). An undirected hop over vertex set F is
@@ -2380,16 +2351,13 @@ object ScaleOpsQueries {
 
   /** Frontier-pruned beam serve over the maintained graph: 3 hops, beam
     * width 4, top-3 answers with distances, query set = live vectors
-    * matching `qpred`. Each hop reads ONLY the frontier's buckets of the
-    * undirected adjacency sink ([[graft.sinks.SnapshotSink.readBuckets]])
+    * with `vec_id % 11 = 0`. Each hop reads ONLY the frontier's buckets of
+    * the undirected adjacency sink ([[graft.sinks.SnapshotSink.readBuckets]])
     * and semi-joins the frontier — per-query cost B·k·hops edges,
-    * independent of corpus size (ScaleStress's `beamserve` extras row
-    * holds the query set FIXED while the corpus grows to show exactly
-    * that; the catalog row's query set grows with the corpus, so it
-    * scales ∝ |queries|).
+    * independent of corpus size; the query set grows with the corpus, so
+    * the whole serve scales ∝ |queries|.
     */
-  private[graft] def beamServeMaintained(s: SparkSession, d: String,
-      qpred: Column): DataFrame = {
+  private[graft] def beamServeMaintained(s: SparkSession, d: String): DataFrame = {
     val (graphSink, vecSink) = annMaintainedKnnGraph(s, d)
     val rev = annMaintainedRevIndex(s, d)
     val metaSink = new graft.sinks.SnapshotSink(s, s"${knnGraphCache(d)}/meta",
@@ -2402,7 +2370,7 @@ object ScaleOpsQueries {
     val vecP = vecSink.pin()
     val dist = (a: String, b: String) => expr(
       s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), (acc, v) -> acc + v)")
-    // Query discovery is the serve's ONLY live-state scan (the qpred
+    // Query discovery is the serve's ONLY live-state scan (the query
     // filter must see every live vector once, column-pruned to
     // (vec_id, q)); every later vector access — candidate scoring per
     // hop — is a bucket-pruned point read of the pk-bucketed vector
@@ -2412,7 +2380,7 @@ object ScaleOpsQueries {
     // reads return live rows only), same semantics as the former full
     // read.
     val qvec = graft.core.Prof.time("beamserve/qvec") {
-      vecP.readAll().filter(qpred)
+      vecP.readAll().filter(col("vec_id") % 11 === 0)
         .select(col("vec_id").as("qid"), col("q").as("qq")).localCheckpoint()
     }
     // entry point from the maintained bottom-ids metadata row — a 1-row
@@ -2586,8 +2554,7 @@ object ScaleOpsQueries {
 
   /** Quantize + cell-assign `vecs` (vec_id, embedding) against dataset
     * `d`'s frozen base quantizer → (vec_id, q, cell). Cost ∝ |vecs| —
-    * the incremental-maintenance unit ScaleStress times at a fixed batch
-    * size against a grown corpus.
+    * the incremental-maintenance unit, independent of the corpus size.
     */
   def annAssignAgainstBase(s: SparkSession, d: String, vecs: DataFrame): DataFrame = {
     val distExpr = expr(
@@ -2605,20 +2572,17 @@ object ScaleOpsQueries {
   }
 
   /** Probe a maintained (vec_id, q, cell) index: queries = the live rows
-    * matching `queryFilter`, nprobe=2 coarse cells per query, exact
+    * with `vec_id % 50 = 0`, nprobe=2 coarse cells per query, exact
     * integer-lattice ranking over the probed cells' members, top-3.
     * Salted ×32 against the pinned-C=16 shuffle skew (the
     * sim_ivfpq_adc_topk measurement: ≤16 shuffle keys idle the cluster;
-    * the salt spreads cells without changing candidates). Parameterized
-    * on the query filter so ScaleStress can measure the PRODUCTION
-    * regime (fixed query set, corpus grows) next to the harness regime
-    * (queries scale with the corpus).
+    * the salt spreads cells without changing candidates).
     */
-  private[graft] def annProbeMaintained(idx: DataFrame, seedsOne: DataFrame,
-      queryFilter: Column): DataFrame = {
+  private[graft] def annProbeMaintained(idx: DataFrame,
+      seedsOne: DataFrame): DataFrame = {
     val distExpr = expr(
       "aggregate(zip_with(qq, cv, (a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), (acc, v) -> acc + v)")
-    val qs = idx.filter(queryFilter)
+    val qs = idx.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("q").as("qq"))
     val wq = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("cell"))
     val probes = qs.crossJoin(broadcast(seedsOne))
@@ -2721,7 +2685,7 @@ object ScaleOpsQueries {
   /** The CDC-maintained IVF index with AUTO-SPLIT — ann_ivf_cell_split's
     * deterministic 2-means wired INTO the maintenance loop, closing the
     * pinned-C=16 regime the r10 verdict flagged (cell population grew
-    * with the corpus, so probe candidate sets — and the 30× stress rows
+    * with the corpus, so probe candidate sets — and the 30× scale runs
     * — went quadratic). Two sinks: the pk-bucketed vector index
     * (vec_id → q, cell) and the centroid set (cell → cv), seeded with
     * the 16 base seeds. Per batch: (1) the batch's vectors assign
@@ -2739,7 +2703,7 @@ object ScaleOpsQueries {
     * size; C ∝ N/cap keeps every probe's candidate set O(cap).
     */
   /** Path cache for the autosplit maintained index — the [[knnGraphCache]]
-    * treatment: the index/probe entry pair (and the stress rows) share ONE
+    * treatment: the index/probe entry pair share ONE
     * build per dataset dir; paths only, never DataFrames (reads must be
     * fresh against the current manifest).
     */

@@ -596,8 +596,8 @@ object StreamingQueries {
       s2.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // changelog checkpointing: per-batch commit appends a changelog
-      // instead of snapshotting every store (the DcpTrickleProbe floor
-      // measurement — 2.5x per-batch win on the trickled dcp path)
+      // instead of snapshotting every store (measured 2.5x per-batch win
+      // on the trickled dcp path)
       s2.conf.set(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")

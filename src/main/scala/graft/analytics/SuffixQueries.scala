@@ -160,18 +160,6 @@ object SuffixQueries {
   private val saCache =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** Drop the cached index path for dataset `d`, forcing the next
-    * [[built]] call to pay the full doubling-chain rebuild. This is the
-    * measurement hook behind ScaleStress's `sfxrebuild` row: in a default
-    * stress run the names loop has already built (and cached) the scaled
-    * dir's index, so without eviction the "rebuild" timing would measure
-    * a cached parquet re-read. It is also the session-level lever the
-    * refresh contract names — production's rebuild-on-growth trigger is
-    * exactly "evict, then rebuild on next read".
-    */
-  private[graft] def evictIndexCache(d: String): Unit =
-    saCache.synchronized { saCache.remove(d); () }
-
   /** Refresh contract (the index's STALENESS semantics under CDC): the
     * suffix array is a build-once OFFLINE index — it answers as-of its
     * build, and the cache never invalidates within a session. Production
@@ -185,9 +173,8 @@ object SuffixQueries {
     * by rank lookup) saves less than it costs here: every new doc's
     * suffixes interleave arbitrarily in SA order, forcing a global
     * re-rank anyway — which is exactly one doubling-chain rebuild.
-    * ScaleStress's `sfxrebuild` block measures the 10× vs 30× rebuild
-    * cost backing this contract (near-linear: the round count grows
-    * log-slowly, each round ∝ stream).
+    * The 10× vs 30× rebuild cost measured near-linear (the round count
+    * grows log-slowly, each round ∝ stream).
     */
   private def built(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     // synchronized around getOrElseUpdate: TrieMap alone may run the

@@ -129,13 +129,6 @@ object ChangeLog {
     compact(filled, pkCols, seqCol, opCol)
   }
 
-  /** Replay a bounded seq range of the log — the reference's `padder`
-    * fail-over repair tool (padder/padder.go) reduces to re-applying a
-    * changelog slice; the LWW snapshot sink makes replay idempotent.
-    */
-  def replayRange(log: DataFrame, fromSeq: Long, toSeq: Long, seqCol: String = "seq"): DataFrame =
-    log.filter(col(seqCol) >= fromSeq && col(seqCol) <= toSeq)
-
   /** Repartition a change-log by key so per-key order can be enforced
     * within each partition without a global sort — the Spark analogue of
     * the scheduler's table dispatch + dependency latches

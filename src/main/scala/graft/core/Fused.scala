@@ -1,6 +1,9 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.collect_set
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
 
 /** Checkpoint a frame AND read an aggregate of it from the SAME job.
   *
@@ -16,12 +19,35 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
   *
   * The metric must be defined on an empty frame: count(...) is (0);
   * a bare sum(...) is not (null).
+  *
+  * Every read of an observed metric goes through [[observedOr]], which
+  * waits a bounded time and otherwise runs the metric as its own job.
   */
 object Fused {
+  /** How long a finished action's observed metrics may take to arrive.
+    * They come through the listener bus, normally within milliseconds.
+    */
+  private val ObservationWait = 10.seconds
+
+  /** Metric `name` of `obs`, whose action has already run, or the
+    * `standalone` job's answer when the metric does not arrive: the wait
+    * passes [[ObservationWait]] (the action posted its event to another
+    * session's listeners), or the metrics row lacks `name` (AQE pruned
+    * the CollectMetrics node out of the final plan).
+    */
+  def observedOr[A](obs: Observation, name: String)(standalone: => A): A = {
+    val row =
+      try Some(Await.result(obs.future, ObservationWait))
+      catch { case _: TimeoutException => None }
+    row.filter(r => r.schema != null && r.schema.fieldNames.contains(name))
+      .fold(standalone)(_.getAs[A](name))
+  }
+
   def checkpointCount(df: DataFrame, metric: Column): (DataFrame, Long) = {
     val obs = Observation()
     val out = df.observe(obs, metric.as("m")).localCheckpoint()
-    (out, obs.get("m").asInstanceOf[Number].longValue)
+    val n = observedOr[Number](obs, "m")(out.agg(metric).head().getAs[Number](0))
+    (out, n.longValue)
   }
 
   /** Checkpoint a frame AND collect a small distinct set from the SAME
@@ -34,9 +60,10 @@ object Fused {
     */
   def checkpointIntSet(df: DataFrame, setExpr: Column): (DataFrame, Set[Int]) = {
     val obs = Observation()
-    val out = df.observe(obs, org.apache.spark.sql.functions.collect_set(setExpr).as("s"))
-      .localCheckpoint()
-    (out, obs.get("s").asInstanceOf[scala.collection.Seq[Int]].toSet)
+    val out = df.observe(obs, collect_set(setExpr).as("s")).localCheckpoint()
+    val set = observedOr[collection.Seq[Int]](obs, "s")(
+      out.agg(collect_set(setExpr)).head().getSeq[Int](0))
+    (out, set.toSet)
   }
 
   /** The distinct values of a small non-negative int expression — bucket

@@ -99,6 +99,4 @@ final class SchemaCatalog(fetch: (String, String) => StructType) {
     */
   def invalidate(db: String): Unit =
     cache.keys.filter(_._1 == db).foreach(cache.remove)
-
-  def cachedTables: Set[(String, String)] = cache.keySet.toSet
 }

@@ -37,9 +37,6 @@ object PluginHandshake {
     out.toByteArray
   }
 
-  def decodeHealthCheckRequestService(b: Array[Byte]): String =
-    if (b.length >= 2 && b(0) == 0x0a) new String(b, 2, b(1) & 0xff, "UTF-8") else ""
-
   /** grpc.health.v1.HealthCheckResponse{ ServingStatus status = 1 };
     * SERVING = 1.
     */

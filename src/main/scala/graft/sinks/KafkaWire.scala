@@ -744,7 +744,7 @@ object KafkaWire {
   *
   * Topology: the batch is repartitioned on the broker-partition
   * expression and produced from EXECUTORS — one wire connection per
-  * task inside `foreachPartition`, the shape [[FileKafkaSink]] and
+  * task inside `foreachPartition`, the shape [[KafkaFileBatchSink]] and
   * [[JdbcBatchSink]] already use — so a backfill-sized micro-batch
   * never transits the driver. All of one broker partition's rows land
   * in one task (the repartition is deterministic on the partition id),

@@ -738,18 +738,6 @@ object EsDocs {
     parent.join(nested, parent(parentKey) === nested(fk), "left").drop(fk)
   }
 
-  /** EsModel one-one sub-route: child columns merged into the parent doc
-    * under a prefix (esmodel_router.go one-one PropertyPre mode) — a left
-    * join with renamed columns.
-    */
-  def nestedOneOne(parent: DataFrame, child: DataFrame, fk: String,
-      parentKey: String, prefix: String): DataFrame = {
-    val renamed = child.columns.filterNot(_ == fk).foldLeft(child) { (d, c) =>
-      d.withColumnRenamed(c, s"$prefix$c")
-    }
-    parent.join(renamed, parent(parentKey) === renamed(fk), "left").drop(fk)
-  }
-
   /** Route column maps (esmodel_router.go:121-179): `include` whitelists
     * doc columns (empty = all), `exclude` blacklists, `convert` renames
     * source column → ES field name. Applied in that order, matching the

@@ -11,9 +11,9 @@ import org.apache.spark.sql.types._
   * `readStream.format("kafka")` + a declarative `from_json` decode, and
   * offsets live in the streaming checkpoint.
   *
-  * The decoders below invert graft.sinks.KafkaJson (the reference wire
-  * formats), so graft both produces and consumes its bus format —
-  * a full data-bus round trip.
+  * The decoder below reads the reference's v0.1 documents
+  * (rdb_json.go:18-104); graft's own producer writes 2.0.alpha
+  * (graft.sinks.KafkaJson).
   */
 object KafkaCdc {
 
@@ -45,18 +45,6 @@ object KafkaCdc {
         col("m.data").as("data"),
         col("m.old").as("old"),
         col("m.pks").as("pks"))
-
-  /** 2.0.alpha schema for a typed payload struct. */
-  def v20Schema(payload: StructType, pks: StructType): StructType = StructType(Seq(
-    StructField("version", StringType),
-    StructField("database", StringType),
-    StructField("table", StringType),
-    StructField("type", StringType),
-    StructField("data", payload),
-    StructField("pks", pks)))
-
-  def decodeV20(valueCol: Column, payload: StructType, pks: StructType): Column =
-    from_json(valueCol, v20Schema(payload, pks))
 
   /** Drop graft's own replicated traffic when tailing a target that is
     * also a source (bidirectional loop prevention) — the reference tags

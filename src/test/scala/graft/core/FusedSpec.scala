@@ -1,6 +1,7 @@
 package graft.core
 
 import graft.SparkSpec
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 
 class FusedSpec extends SparkSpec {
@@ -58,5 +59,23 @@ class FusedSpec extends SparkSpec {
     assert(n == out.filter(col("chg")).count())
     assert(n == 2)
     assert(out.count() == 5, "the checkpointed frame keeps ALL rows, not just matches")
+  }
+
+  test("observedOr falls back to the standalone job when the metric never arrives") {
+    val metric = count(lit(1)).as("m")
+    // observed path: the action runs on the observing session
+    val seen = Observation()
+    spark.range(10).toDF("x").observe(seen, metric).collect()
+    val viaObs = Fused.observedOr[Long](seen, "m")(sys.error("standalone job not expected"))
+    // fallback: the observed frame belongs to another session, so the
+    // action's event reaches listeners that do not know the observation
+    val lost = Observation()
+    val observed = spark.newSession().range(10).toDF("x").observe(lost, metric)
+    val joined = spark.range(1).toDF("y").crossJoin(observed)
+    assert(joined.count() == 10)
+    var ranStandalone = false
+    val viaJob = Fused.observedOr[Long](lost, "m") { ranStandalone = true; joined.count() }
+    assert(ranStandalone && !lost.future.isCompleted)
+    assert(viaJob == viaObs && viaObs == 10L)
   }
 }

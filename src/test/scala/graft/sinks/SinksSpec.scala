@@ -48,34 +48,21 @@ class SinksSpec extends SparkSpec {
       Seq((false, Seq(1L, 2L)), (true, Seq(3L)), (true, Seq(4L)), (false, Seq(5L))))
   }
 
-  test("kafka v0.1 wire format fields match the reference serde") {
-    val env = Seq((1L, "insert", "dbx", "users",
-      java.sql.Timestamp.valueOf("2024-01-02 03:04:05"),
-      Map("id" -> "1", "name" -> "n"), Map.empty[String, String], Map("id" -> "1")))
-      .toDF("seq", "op", "database", "table", "event_ts", "data", "old", "pks")
-    val out = KafkaJson.toKafkaFrame(env,
-      KafkaJson.valueV01(host = "h1"), Seq("seq"), lit("topic-a"))
-    val r = out.head()
-    // seq rides along for order-proving transports (FileKafkaSink)
-    assert(out.columns.toSeq == Seq("key", "value", "topic", "seq"))
-    val json = r.getAs[String]("value")
-    // parse back with Spark's JSON reader for structural assertions
-    val parsed = spark.read.json(Seq(json).toDS).head()
-    assert(parsed.getAs[String]("version") == "0.1")
-    assert(parsed.getAs[String]("type") == "insert")
-    assert(parsed.getAs[String]("time_zone") == "Asia/Shanghai")
-    assert(parsed.getAs[String]("host") == "h1")
-    assert(parsed.getAs[Long]("ts") == java.sql.Timestamp.valueOf("2024-01-02 03:04:05").getTime / 1000)
-  }
-
   test("kafka 2.0.alpha typed payload") {
     val typed = Seq((7L, "update", "dbx", "users", 42L, "bob"))
       .toDF("seq", "op", "database", "table", "id", "name")
-    val out = KafkaJson.toKafkaFrame(typed,
-      KafkaJson.valueV20(Seq("id", "name"), Seq("id")), Seq("id"), lit("t"))
+    val out = KafkaJson.records(typed, numPartitions = 4, pkCols = Seq("id"),
+      payloadColumns = None)
+    assert(out.columns.toSeq == Seq("__part", "key", "value"))
     val parsed = spark.read.json(Seq(out.head().getAs[String]("value")).toDS).head()
     assert(parsed.getAs[String]("version") == "2.0.alpha")
+    assert(parsed.getAs[String]("database") == "dbx")
+    assert(parsed.getAs[String]("table") == "users")
+    assert(parsed.getAs[String]("type") == "update")
+    // bookkeeping columns (seq, op, database, table) stay out of data
+    assert(parsed.getAs[Row]("data").schema.fieldNames.toSeq == Seq("id", "name"))
     assert(parsed.getAs[Row]("data").getAs[Long]("id") == 42L)
+    assert(parsed.getAs[Row]("data").getAs[String]("name") == "bob")
     assert(parsed.getAs[Row]("pks").getAs[Long]("id") == 42L)
   }
 
@@ -159,18 +146,5 @@ class SinksSpec extends SparkSpec {
     assert(bare.qualify("", "target_orders") == "target_orders")
     intercept[IllegalArgumentException](bare.qualify("", "t; DROP TABLE x"))
     intercept[IllegalArgumentException](ReplaceEngine.qualify("", "t\nx"))
-  }
-
-  test("v0.1 payload stringification uses the reference time layout") {
-    val df = Seq((
-      42L, 3.14, "x",
-      java.sql.Timestamp.valueOf("2024-01-02 03:04:05.500000"),
-      java.sql.Timestamp.valueOf("2024-01-02 03:04:00")))
-      .toDF("i", "d", "s", "t1", "t2")
-    val m = df.select(KafkaJson.stringifyV01(df, Seq("i", "d", "s", "t1", "t2")).as("m"))
-      .as[Map[String, String]].head()
-    assert(m("i") == "42" && m("d") == "3.14" && m("s") == "x")
-    assert(m("t1") == "2024-01-02 03:04:05.5")   // trailing zeros trimmed
-    assert(m("t2") == "2024-01-02 03:04:00")     // whole fraction trimmed
   }
 }

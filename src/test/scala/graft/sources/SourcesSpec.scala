@@ -1,31 +1,40 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.sinks.KafkaJson
 import org.apache.spark.sql.functions._
 
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
-  test("kafka v0.1 wire format round-trips encode -> decode") {
-    val env = Seq(
-      (1L, "insert", "dbx", "users",
-        java.sql.Timestamp.valueOf("2024-01-02 03:04:05"),
-        Map("id" -> "1", "name" -> "n"), Map.empty[String, String], Map("id" -> "1")),
-      (2L, "delete", "dbx", "users",
-        java.sql.Timestamp.valueOf("2024-01-02 03:04:06"),
-        Map("id" -> "2"), Map.empty[String, String], Map("id" -> "2")))
-      .toDF("seq", "op", "database", "table", "event_ts", "data", "old", "pks")
+  test("kafka v0.1 documents decode into the envelope") {
+    // gravity's v0.1 layout (rdb_json.go:18-104): header with epoch-second
+    // ts, time_zone and host; every data/old/pks value a string
+    val docs = Seq(
+      (1L, """{"version":"0.1","database":"dbx","table":"users","type":"insert",""" +
+        """"ts":1704164645,"time_zone":"Asia/Shanghai","host":"h1",""" +
+        """"data":{"id":"1","name":"n"},"old":{},"pks":{"id":"1"}}"""),
+      (2L, """{"version":"0.1","database":"dbx","table":"users","type":"update",""" +
+        """"ts":1704164646,"time_zone":"Asia/Shanghai","host":"h1",""" +
+        """"data":{"id":"1","name":"n2"},"old":{"id":"1","name":"n"},"pks":{"id":"1"}}"""),
+      (3L, """{"version":"0.1","database":"dbx","table":"users","type":"delete",""" +
+        """"ts":1704164647,"time_zone":"Asia/Shanghai","host":"h1",""" +
+        """"data":{"id":"2"},"old":{},"pks":{"id":"2"}}"""))
+      .toDF("seq", "value")
+    val decoded = KafkaCdc.envelopeFromV01(docs, col("seq"))
 
-    val encoded = env.select(col("seq"), KafkaJson.valueV01("h1").as("value"))
-    val decoded = KafkaCdc.envelopeFromV01(encoded, col("seq"))
-
-    val back = decoded.select("seq", "op", "database", "table", "event_ts", "data", "pks")
-      .as[(Long, String, String, String, java.sql.Timestamp, Map[String, String], Map[String, String])]
+    val back = decoded.select("seq", "op", "database", "table", "event_ts", "data", "old", "pks")
+      .as[(Long, String, String, String, java.sql.Timestamp, Map[String, String],
+        Map[String, String], Map[String, String])]
       .collect().sortBy(_._1)
-    assert(back(0) == (1L, "insert", "dbx", "users",
-      java.sql.Timestamp.valueOf("2024-01-02 03:04:05"), Map("id" -> "1", "name" -> "n"), Map("id" -> "1")))
-    assert(back(1)._2 == "delete" && back(1)._6 == Map("id" -> "2"))
+    assert(back.map(_._2).toSeq == Seq("insert", "update", "delete"))
+    assert(back.forall(b => b._3 == "dbx" && b._4 == "users"))
+    // 2024-01-02 03:04:05 UTC, whatever the JVM's zone
+    assert(back.map(_._5.getTime).toSeq ==
+      Seq(1704164645000L, 1704164646000L, 1704164647000L))
+    assert(back(0)._6 == Map("id" -> "1", "name" -> "n") && back(0)._7 == Map.empty)
+    assert(back(1)._6 == Map("id" -> "1", "name" -> "n2") &&
+      back(1)._7 == Map("id" -> "1", "name" -> "n"))
+    assert(back(2)._6 == Map("id" -> "2") && back(2)._8 == Map("id" -> "2"))
   }
 
   test("internal traffic elision drops own replication writes") {
